@@ -1,3 +1,6 @@
+import uuid
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import SparkSession
 
@@ -16,3 +19,27 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` — afterwards ``jobs`` holds the ids
+    of the Spark jobs this thread started inside the block (a unique job
+    group, read back through ``statusTracker()``)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def count():
+        group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, "jobs counted by a test")
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            # the status store is fed by the async listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return count

@@ -150,19 +150,19 @@ def test_schema_precedence_modes(spark, tmp_path):
              "schema_name": "sess_db", "table_name": ""}]
 
     stmt_cfg = ApplyConfig(observed={"stmt_db": ["files"]}, schema_precedence="statement")
-    got = BatchApplier(table, stmt_cfg)._collect_ddl(None, precollected=rows)
+    got = BatchApplier(table, stmt_cfg)._classify_ddl(rows)
     assert [d["schema_name"] for d in got] == ["stmt_db"]
     # same statement is NOT intercepted when only the session schema is observed
     sess_only = ApplyConfig(observed={"sess_db": ["files"]}, schema_precedence="statement")
-    assert BatchApplier(table, sess_only)._collect_ddl(None, precollected=rows) == []
+    assert BatchApplier(table, sess_only)._classify_ddl(rows) == []
 
     ref_cfg = ApplyConfig(observed={"sess_db": ["files"]}, schema_precedence="session")
-    got = BatchApplier(table, ref_cfg)._collect_ddl(None, precollected=rows)
+    got = BatchApplier(table, ref_cfg)._classify_ddl(rows)
     assert [d["schema_name"] for d in got] == ["sess_db"]
     # unqualified statement: both modes fall back to the event's session schema
     rows2 = [{"gtid": 2, "op": "QUERY", "ddl": "TRUNCATE TABLE files",
               "schema_name": "sess_db", "table_name": ""}]
-    got = BatchApplier(table, sess_only)._collect_ddl(None, precollected=rows2)
+    got = BatchApplier(table, sess_only)._classify_ddl(rows2)
     assert [d["schema_name"] for d in got] == ["sess_db"]
 
 

@@ -9,14 +9,21 @@ table "needed by our engine"): per micro-batch —
    DELETE→before, UPDATE→after; an UPDATE whose *key* changed explodes
    into DELETE(before-key) + INSERT(after-key) at the same GTID (binlog
    PK-update semantics the reference forwards verbatim).
-3. **DDL interception** (S6 + north rule): ALTER events split the batch at
-   their GTID boundaries (SURVEY.md §7 hard part (c)); each DML segment
-   merges under the schema in force at its position, then the DDL applies
-   as a metadata commit before the next segment. TRUNCATE is a GTID
-   marker committed atomically with the batch's final merge.
-4. **merge** per segment via :meth:`LakeTable.merge` — merge-on-read delta
-   append by default (O(batch)), copy-on-write optional; idempotent
-   (see plans/lake.py).
+3. **DDL interception** (S6 + north rule): schema-changing ALTER events
+   split the batch at their GTID boundaries (SURVEY.md §7 hard part (c));
+   each DML segment merges under the schema in force at its position,
+   then the DDL applies as a metadata commit before the next segment.
+   TRUNCATE is a GTID marker committed atomically with the batch's final
+   segment commit. The DDL collect job also observes the count and gtid
+   range of the batch's observed DML, which tells which segments are
+   provably empty.
+4. **commit** per segment, under its own sub-id: a segment holding DML
+   merges via :meth:`LakeTable.merge` — merge-on-read delta append by
+   default (O(batch)), copy-on-write optional; idempotent (see
+   plans/lake.py). An empty segment commits metadata only
+   (:meth:`LakeTable.commit_staged` of an empty write, no Spark job); its
+   commit still advances ``last_batch_id``, which is what makes a
+   crash-replay skip the DDLs before it.
 
 DDL rows are collected to the driver: they are O(1) per batch by
 construction (~1% of events, and segments exist only where they occur) —
@@ -25,9 +32,11 @@ never the DML path.
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.ddl import classify_ddl, ddl_matches_any, parse_alter, parse_create
@@ -44,6 +53,30 @@ def ddl_candidates_cond():
     return F.col("op").isin(*DDL_OPS) | (
         (F.col("op") == "QUERY") & ddl_matches_any(F.coalesce(F.col("ddl"), F.lit("")))
     )
+
+
+@dataclass(frozen=True)
+class DmlStats:
+    """Count and gtid range of a batch's observed DML rows, observed by the
+    DDL collect job (no job of its own)."""
+
+    count: int
+    min_gtid: int | None
+    max_gtid: int | None
+
+    def empty_between(self, low: int | None, hi: int | None) -> bool:
+        """True iff no observed DML row has ``low < gtid < hi`` (None =
+        unbounded): none at all, none above ``low`` or below ``hi``, or no
+        integer gtid fits between the bounds (back-to-back DDLs, or a
+        segment wholly at or below a TRUNCATE floor). Rows with a NULL gtid
+        fail any bound, as they fail the segment filters."""
+        if self.count == 0:
+            return True
+        if low is not None and hi is not None and hi <= low + 1:
+            return True
+        if low is not None and (self.max_gtid is None or self.max_gtid <= low):
+            return True
+        return hi is not None and (self.min_gtid is None or self.min_gtid >= hi)
 
 
 @dataclass
@@ -154,23 +187,27 @@ class BatchApplier:
 
     # ------------------------------------------------------------ projection
 
-    def flatten_dml(self, batch: DataFrame) -> DataFrame:
-        """Change events (nested before/after) -> flat keyed change rows.
-
-        One narrow-only pass (filter + array + explode): stays inside
-        whole-stage codegen, no shuffle, no Python.
-        """
-        cfg = self.config
+    def _observed_dml_cond(self):
+        """The rows :meth:`flatten_dml` keeps: DML of an observed (schema,
+        table) pair. Also the predicate of the DDL scan's DML observation,
+        so the empty-segment test and the merge input cannot drift."""
         pair_col = F.struct(F.col("schema_name"), F.col("table_name"))
         observed = F.array(
             *[
                 F.struct(F.lit(s).alias("schema_name"), F.lit(t).alias("table_name"))
-                for s, t in cfg.observed_pairs()
+                for s, t in self.config.observed_pairs()
             ]
         )
-        dml = batch.filter(F.col("op").isin(*DML_OPS)).filter(
-            F.array_contains(observed, pair_col)
-        )
+        return F.col("op").isin(*DML_OPS) & F.array_contains(observed, pair_col)
+
+    def flatten_dml(self, batch: DataFrame) -> DataFrame:
+        """Change events (nested before/after) -> flat keyed change rows.
+
+        One narrow-only pass (filter + array + explode): stays inside
+        whole-stage codegen, no shuffle, no Python. Every kept event yields
+        at least one change row.
+        """
+        dml = batch.filter(self._observed_dml_cond())
         keys = self.table.snapshot.key_names
         key_changed = None
         for k in keys:
@@ -215,19 +252,49 @@ class BatchApplier:
 
     # ------------------------------------------------------------ DDL
 
-    def _collect_ddl(self, batch: DataFrame, precollected: list | None = None) -> list[dict]:
-        """Classify + collect this batch's DDL rows (tiny by construction).
+    def _collect_ddl(self, batch: DataFrame, precollected: list | None = None
+                     ) -> tuple[list[dict], DmlStats | None]:
+        """Collect + classify this batch's DDL rows (tiny by construction).
 
-        Accepts pre-classified ops (TRUNCATE/ALTER_TABLE/...) or raw
-        op='QUERY' rows classified here via the pattern.go regex families;
-        non-matching statements are dropped (listener.go:254-256).
-        ``precollected`` lets the runner scan the stream for DDL once and
-        hand each batch its slice — saving one Spark job per batch."""
-        rows = precollected if precollected is not None else (
-            batch.filter(ddl_candidates_cond())
+        The collect job carries an Observation of the batch's observed DML
+        (count, min/max gtid) — same scan, no extra job or stage — returned
+        as the second element. ``precollected`` lets the runner scan the
+        stream for DDL once and hand each batch its slice, saving one Spark
+        job per batch; such callers get no stats (None)."""
+        if precollected is not None:
+            return self._classify_ddl(precollected), None
+        ddl_cond, stat_exprs = self._ddl_scan_exprs
+        obs = Observation(f"ddl-scan-{uuid.uuid4().hex[:8]}")
+        rows = (
+            batch.observe(obs, *stat_exprs)
+            .filter(ddl_cond)
             .select("gtid", "op", "ddl", "schema_name", "table_name")
             .collect()
         )
+        m = LakeTable._obs_get_safe(obs)
+        stats = (DmlStats(int(m["n"]), m["lo"], m["hi"])
+                 if m.get("n") is not None else None)
+        return self._classify_ddl(rows), stats
+
+    @cached_property
+    def _ddl_scan_exprs(self) -> tuple:
+        """The DDL scan's filter and observed-DML aggregates, built once per
+        applier: each PySpark Column call is a JVM round trip with
+        call-site capture (milliseconds apiece), a fixed cost every batch
+        would otherwise pay."""
+        dml = self._observed_dml_cond()
+        return ddl_candidates_cond(), [
+            F.count(F.when(dml, 1)).alias("n"),
+            F.min(F.when(dml, F.col("gtid"))).alias("lo"),
+            F.max(F.when(dml, F.col("gtid"))).alias("hi"),
+        ]
+
+    def _classify_ddl(self, rows: list) -> list[dict]:
+        """Classify DDL candidate rows, keeping this applier's observed pairs.
+
+        Accepts pre-classified ops (TRUNCATE/ALTER_TABLE/...) or raw
+        op='QUERY' rows classified here via the pattern.go regex families;
+        non-matching statements are dropped (listener.go:254-256)."""
         out = []
         observed = set(self.config.observed_pairs())
         for r in sorted(rows, key=lambda r: r["gtid"]):
@@ -363,7 +430,7 @@ class BatchApplier:
         fresh table's first DDL-segmented batch must not leave applied
         sub-batches with no recorded span).
         """
-        ddls = self._collect_ddl(batch, precollected=precollected_ddl)
+        ddls, dml_stats = self._collect_ddl(batch, precollected=precollected_ddl)
 
         # Within-batch resume (this batch was partially applied before — a
         # crash, or an append-only source that has since grown): everything
@@ -394,7 +461,7 @@ class BatchApplier:
         }
 
         # TRUNCATE is a GTID high-water marker, committed atomically with
-        # the batch's final merge (O(1), order-safe, replay-monotonic).
+        # the batch's final segment commit (O(1), order-safe, replay-monotonic).
         # Dead-row elision: DML at or before the marker never survives a
         # read, so don't even write it.
         trunc_gtids = [d["gtid"] for d in ddls if d["op"] == "TRUNCATE"]
@@ -411,7 +478,7 @@ class BatchApplier:
         # events on each side of an ALTER see different table shapes.
         # Segments and DDLs share one monotonic sub-id sequence; the
         # table's last_batch_id guard makes any crash-replay prefix a no-op.
-        # Sub-ids live in a 1024-slot space per batch (batch_id * 1024 + pos);
+        # Sub-ids live in a 1024-slot space per batch (batch_id * 1024 + pos + slot);
         # overflowing would bleed into batch k+1's range and silently skip its
         # early segments via the exactly-once guard. Fail loudly instead —
         # hitting this means the batch span holds >500 schema DDLs, i.e. the
@@ -432,30 +499,36 @@ class BatchApplier:
         # merge job per occurrence (round-6: 9 of cdc_replay_with_ddl's
         # 10 ALTERs were no-op re-ADDs — ~0.7s of pure fixed cost each).
         # The DDLs themselves still APPLY in gtid order with their own
-        # sub-ids (metrics, version history, crash-replay identical);
-        # only the data-segmentation boundaries move.
+        # sub-ids; only the data-segmentation boundaries move.
+        #
+        # Sub-ids are FIXED slots per DDL index — the segment ending at
+        # DDL j takes 2j, DDL j takes 2j+1, the last segment 2n — not a
+        # running count: the changing/no-op decision is made against the
+        # CURRENT table, so a crash-replay of this batch sees its applied
+        # DDLs as no-ops, and a running count would shift every later
+        # sub-id under the exactly-once guard and skip DDLs that never
+        # applied. A replay also keeps every boundary up to the slots it
+        # already committed, so its first live segment starts exactly
+        # where the committed ones stopped (no rows written twice).
         changing = self._simulate_schema_changes(schema_ddls)
-        plan: list[tuple[str, object, object]] = []
+        done = self._last_batch_id - (batch_id * 1024 + pos)
+        # (slot, ddl, lo, hi): a DDL step, or (ddl None) a segment lo < gtid < hi
+        plan: list[tuple[int, dict | None, int | None, int | None]] = []
         lo: int | None = None
-        for d, ch in zip(schema_ddls, changing):
-            if ch:
-                plan.append(("seg", lo, d["gtid"]))
+        for j, (d, ch) in enumerate(zip(schema_ddls, changing)):
+            if ch or 2 * j <= done:
+                plan.append((2 * j, None, lo, d["gtid"]))
                 lo = d["gtid"]
-            plan.append(("ddl", d, None))
-        plan.append(("seg", lo, None))
-        last_seg_idx = max(i for i, p in enumerate(plan) if p[0] == "seg")
+            plan.append((2 * j + 1, d, None, None))
+        plan.append((2 * len(schema_ddls), None, lo, None))
 
-        for i, step in enumerate(plan):
-            if step[0] == "ddl":
-                ddl_sub = batch_id * 1024 + pos
-                pos += 1
-                if ddl_sub > self._last_batch_id:
-                    applied = self._apply_ddl(step[1])
+        for i, (slot, ddl, lo_g, hi_g) in enumerate(plan):
+            sub_id = batch_id * 1024 + pos + slot
+            if ddl is not None:
+                if sub_id > self._last_batch_id:
+                    applied = self._apply_ddl(ddl)
                     metrics["ddl_applied" if applied else "ddl_dropped"] += 1
                 continue
-            _, lo_g, hi_g = step
-            sub_id = batch_id * 1024 + pos
-            pos += 1
             # Flatten under the table in force *at this segment*: a
             # CREATE/DROP boundary can rebind self.table (catalog mode),
             # changing the key set the flatten projects on. A None table
@@ -463,26 +536,32 @@ class BatchApplier:
             # yet created) — a real binlog can't carry row events for a
             # nonexistent table, so nothing is lost by skipping.
             if self.table is not None and sub_id > self._last_batch_id:
-                seg = self.flatten_dml(batch)
-                if gtid_floor is not None:
-                    seg = seg.filter(F.col(GTID_COL) > gtid_floor)
-                if lo_g is not None:
-                    seg = seg.filter(F.col(GTID_COL) > lo_g)
-                if hi_g is not None:
-                    seg = seg.filter(F.col(GTID_COL) < hi_g)
-                m = self.table.merge(
-                    seg, sub_id,
-                    mode=self.config.merge_mode,
-                    files_per_bucket=self.config.files_per_bucket,
-                    auto_compact_deltas=self.config.auto_compact_deltas,
-                    mor_dedup=self.config.mor_dedup,
-                    compact_keep_tombstones=bool(self.config.compact_keep_tombstones),
-                    # the last segment's commit carries the truncate marker
-                    # and the batch-complete property (resume skip);
-                    # every segment carries the crash-durable extra_props
-                    extra_properties=(final_props if i == last_seg_idx
-                                      else (seg_props or None)),
-                )
+                # the last segment's commit carries the truncate marker and
+                # the batch-complete property (resume skip); every segment
+                # carries the crash-durable extra_props
+                props = final_props if i == len(plan) - 1 else (seg_props or None)
+                low = max((g for g in (lo_g, gtid_floor) if g is not None), default=None)
+                if dml_stats is not None and dml_stats.empty_between(low, hi_g):
+                    # Provably no DML in this segment: commit metadata only
+                    # (no Spark job). The commit itself must stay — its
+                    # last_batch_id is what lets a crash-replay skip the
+                    # DDLs before it.
+                    m = self._commit_empty_segment(sub_id, props)
+                else:
+                    seg = self.flatten_dml(batch)
+                    if low is not None:
+                        seg = seg.filter(F.col(GTID_COL) > low)
+                    if hi_g is not None:
+                        seg = seg.filter(F.col(GTID_COL) < hi_g)
+                    m = self.table.merge(
+                        seg, sub_id,
+                        mode=self.config.merge_mode,
+                        files_per_bucket=self.config.files_per_bucket,
+                        auto_compact_deltas=self.config.auto_compact_deltas,
+                        mor_dedup=self.config.mor_dedup,
+                        compact_keep_tombstones=bool(self.config.compact_keep_tombstones),
+                        extra_properties=props,
+                    )
                 if not m.get("skipped"):
                     metrics["rows_inserted"] += m["rows_inserted"]
                     metrics["rows_updated"] += m["rows_updated"]
@@ -491,6 +570,19 @@ class BatchApplier:
                     metrics["partitions"].extend(m.get("partitions", []))
                     metrics["segments"] += 1
         return metrics
+
+    def _commit_empty_segment(self, sub_id: int, props: dict[str, str] | None) -> dict:
+        """What :meth:`LakeTable.merge` commits for a segment without rows
+        — same sub-id, properties, watermark (unchanged) and, in mor mode,
+        auto-compaction check — without its flatten + write job."""
+        cfg = self.config
+        return self.table.commit_staged(
+            self.table.empty_staged(), sub_id, extra_properties=props,
+            auto_compact_deltas=(cfg.auto_compact_deltas
+                                 if cfg.merge_mode == "mor" else None),
+            files_per_bucket=cfg.files_per_bucket,
+            compact_keep_tombstones=bool(cfg.compact_keep_tombstones),
+        )
 
     def _simulate_schema_changes(self, schema_ddls: list[dict]) -> list[bool]:
         """Per DDL: would applying it CHANGE the table's column set?

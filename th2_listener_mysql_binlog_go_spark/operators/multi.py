@@ -125,8 +125,7 @@ class MultiTableApplier:
         total = self._zero_metrics(batch_id)
 
         appliers = {p: self._applier(*p) for p in pairs}
-        ddl_by_pair = {p: appliers[p]._collect_ddl(batch, precollected=rows)
-                       for p in pairs}
+        ddl_by_pair = {p: appliers[p]._classify_ddl(rows) for p in pairs}
         can_parallel = (
             self.config.merge_mode == "mor"
             and not resume_within_batch

@@ -1786,6 +1786,16 @@ class LakeTable:
             "t_write_s": round(_time.monotonic() - t_start, 4),
         }
 
+    def empty_staged(self) -> dict:
+        """A staged write of no rows: :meth:`commit_staged` turns it into the
+        same snapshot an empty :meth:`merge` commits, without a Spark job."""
+        return {
+            "written": [], "epoch": self.snapshot.epoch,
+            "counts": {"rows_inserted": 0, "rows_updated": 0, "rows_deleted": 0},
+            "bucket_counts": {}, "min_gtid": None, "max_gtid": None,
+            "t_write_s": 0.0,
+        }
+
     def commit_staged(
         self,
         staged: dict,
