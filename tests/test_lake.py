@@ -127,6 +127,23 @@ def test_schema_evolution_add_rename_widen(spark, tmp_path):
     assert {r["repo"]: r["stars"] for r in t2.read().collect()} == {"r1": 5, "r2": 2**40}
 
 
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_readded_column_does_not_reuse_dropped_id(spark, tmp_path, mode):
+    """DROP COLUMN then ADD COLUMN of the same name is a new column: the
+    files written before the drop must read NULL under it, not their old
+    values (the re-added column gets an id no snapshot ever used)."""
+    t = _mk(spark, tmp_path)
+    t.merge(_changes(spark, [("r1", "a.py", "c1", "py", "old-content", "INSERT", 1)]),
+            batch_id=1, mode=mode)
+    dropped_id = next(c.id for c in t.snapshot.columns if c.name == "content")
+    t.drop_column("content")
+    t.add_column("content", "string")
+    new_id = next(c.id for c in t.snapshot.columns if c.name == "content")
+    assert new_id > dropped_id
+    assert [r["content"] for r in t.read().collect()] == [None]
+    assert [r["content"] for r in LakeTable.load(spark, t.root).read().collect()] == [None]
+
+
 def test_time_travel_and_compact(spark, tmp_path):
     t = _mk(spark, tmp_path, buckets=2)
     t.merge(_changes(spark, [("r1", "a.py", "c1", "py", "v1", "INSERT", 1)]), batch_id=1)

@@ -262,18 +262,23 @@ def _crash_and_replay(spark, tmp_path, monkeypatch, ddls, cls, method,
     return got
 
 
-@pytest.mark.parametrize("k", [1, 2])
-def test_crash_after_kth_alter_replays_to_same_state(spark, tmp_path, monkeypatch, k):
+@pytest.mark.parametrize("k,resume", [(1, False), (2, False), (1, True), (2, True)],
+                         ids=["1", "2", "1-resume", "2-resume"])
+def test_crash_after_kth_alter_replays_to_same_state(
+        spark, tmp_path, monkeypatch, k, resume):
     """Back-to-back schema-changing ALTERs put empty segments between
     them; their commits advance last_batch_id past each applied DDL, so a
     replay of the interrupted batch neither re-runs nor skips a DDL. The
     ADD-then-RENAME prefix is not idempotent: re-running it would add a
-    second ``stars`` column."""
+    second ``stars`` column. A within-batch resume cannot use the sub-ids
+    (it continues past the last one) nor the watermark (empty segments do
+    not advance it); it skips the DDLs at or below the schema-DDL gtid the
+    applied ALTERs recorded."""
     ddls = ["ALTER TABLE repos.files ADD COLUMN stars INT",
             "ALTER TABLE repos.files RENAME COLUMN stars TO rating",
             "ALTER TABLE repos.files DROP COLUMN content"]
     got = _crash_and_replay(spark, tmp_path, monkeypatch, ddls,
-                            BatchApplier, "_apply_ddl", k + 1, resume=False)
+                            BatchApplier, "_apply_ddl", k + 1, resume=resume)
     assert [(c.id, c.name) for c in got.snapshot.columns] == [
         (1, "repo"), (2, "path"), (4, "rating")]
 

@@ -611,6 +611,31 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument("--files-per-bucket", type=int, default=None)
         sp.add_argument("--lineage-dir", default=None)
 
+    def common_stream(sp, wire: bool):
+        """The tail subcommands' flags: a wire source (JSON-lines bean
+        payloads, decoded in the stream) or a parquet one read under
+        ``--schema``."""
+        if wire:
+            sp.add_argument("--source", required=True,
+                            help="directory of JSON-lines wire payloads (the "
+                                 "reference's published bean-JSON surface)")
+            sp.add_argument("--quarantine-dir", default=None,
+                            help="dead-letter undecodable wire messages here as "
+                                 "parquet envelopes instead of dropping them")
+        else:
+            sp.add_argument("--source", required=True)
+            sp.add_argument("--schema", required=True, help="change-event schema DDL")
+        sp.add_argument("--checkpoint", required=True)
+        sp.add_argument("--continuous", action="store_true",
+                        help="keep tailing instead of drain-and-stop (availableNow)")
+        sp.add_argument("--max-files-per-trigger", type=int, default=None)
+        sp.add_argument("--mode", choices=["mor", "cow"], default=None)
+        sp.add_argument("--files-per-bucket", type=int, default=None)
+        sp.add_argument("--lineage-dir", default=None)
+        sp.add_argument("--resume-from-table", action="store_true",
+                        help="handoff from a backfill: pin epoch base + gtid "
+                             "floor in <checkpoint>/handoff.json")
+
     sp = sub.add_parser("create")
     sp.add_argument("--table", required=True)
     sp.add_argument("--schema", required=True,
@@ -631,56 +656,21 @@ def main(argv: list[str] | None = None) -> int:
 
     sp = sub.add_parser("stream")
     sp.add_argument("--table", required=True)
-    sp.add_argument("--source", required=True)
-    sp.add_argument("--checkpoint", required=True)
-    sp.add_argument("--schema", required=True, help="change-event schema DDL")
-    sp.add_argument("--continuous", action="store_true",
-                    help="keep tailing instead of drain-and-stop (availableNow)")
-    sp.add_argument("--max-files-per-trigger", type=int, default=None)
-    sp.add_argument("--mode", choices=["mor", "cow"], default=None)
-    sp.add_argument("--files-per-bucket", type=int, default=None)
-    sp.add_argument("--lineage-dir", default=None)
-    sp.add_argument("--resume-from-table", action="store_true",
-                    help="handoff from a ReplayRunner backfill: pin epoch "
-                         "base + gtid floor in <checkpoint>/handoff.json")
+    common_stream(sp, wire=False)
     sp.set_defaults(fn=cmd_stream)
 
     sp = sub.add_parser("wire-stream")
     sp.add_argument("--table", required=True)
-    sp.add_argument("--source", required=True,
-                    help="directory of JSON-lines wire payloads (the "
-                         "reference's published bean-JSON surface)")
-    sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--row-ddl", default=None,
                     help='row struct DDL, e.g. "repo string, path string, ..."')
-    sp.add_argument("--continuous", action="store_true")
-    sp.add_argument("--max-files-per-trigger", type=int, default=None)
-    sp.add_argument("--mode", choices=["mor", "cow"], default=None)
-    sp.add_argument("--files-per-bucket", type=int, default=None)
-    sp.add_argument("--lineage-dir", default=None)
-    sp.add_argument("--resume-from-table", action="store_true",
-                    help="handoff from a ReplayRunner backfill: pin epoch "
-                         "base + gtid floor in <checkpoint>/handoff.json")
-    sp.add_argument("--quarantine-dir", default=None,
-                    help="dead-letter undecodable wire messages here as "
-                         "parquet envelopes instead of dropping them")
+    common_stream(sp, wire=True)
     sp.set_defaults(fn=cmd_wire_stream)
 
     sp = sub.add_parser("catalog-stream")
     sp.add_argument("--catalog", required=True)
-    sp.add_argument("--source", required=True)
-    sp.add_argument("--checkpoint", required=True)
-    sp.add_argument("--schema", required=True, help="change-event schema DDL")
     sp.add_argument("--observed", required=True,
                     help="comma-separated schema.table pairs to observe")
-    sp.add_argument("--continuous", action="store_true")
-    sp.add_argument("--max-files-per-trigger", type=int, default=None)
-    sp.add_argument("--mode", choices=["mor", "cow"], default=None)
-    sp.add_argument("--files-per-bucket", type=int, default=None)
-    sp.add_argument("--lineage-dir", default=None)
-    sp.add_argument("--resume-from-table", action="store_true",
-                    help="handoff from a ReplayRunner backfill: pin epoch "
-                         "base + gtid floor in <checkpoint>/handoff.json")
+    common_stream(sp, wire=False)
     sp.set_defaults(fn=cmd_catalog_stream)
 
     sp = sub.add_parser("catalog-create")
@@ -711,24 +701,11 @@ def main(argv: list[str] | None = None) -> int:
 
     sp = sub.add_parser("catalog-wire-stream")
     sp.add_argument("--catalog", required=True)
-    sp.add_argument("--source", required=True,
-                    help="directory of JSON-lines wire payloads")
-    sp.add_argument("--checkpoint", required=True)
     sp.add_argument("--row-ddl", default=None,
                     help="UNION of observed tables' row struct DDLs")
     sp.add_argument("--observed", required=True,
                     help="comma-separated schema.table pairs to observe")
-    sp.add_argument("--continuous", action="store_true")
-    sp.add_argument("--max-files-per-trigger", type=int, default=None)
-    sp.add_argument("--mode", choices=["mor", "cow"], default=None)
-    sp.add_argument("--files-per-bucket", type=int, default=None)
-    sp.add_argument("--lineage-dir", default=None)
-    sp.add_argument("--resume-from-table", action="store_true",
-                    help="handoff from a ReplayRunner backfill: pin epoch "
-                         "base + gtid floor in <checkpoint>/handoff.json")
-    sp.add_argument("--quarantine-dir", default=None,
-                    help="dead-letter undecodable wire messages here as "
-                         "parquet envelopes instead of dropping them")
+    common_stream(sp, wire=True)
     sp.set_defaults(fn=cmd_catalog_wire_stream)
 
     sp = sub.add_parser("catalog-replay")

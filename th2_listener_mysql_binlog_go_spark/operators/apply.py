@@ -44,6 +44,14 @@ from ..plans.lake import GTID_COL, OP_COL, SEQ_COL, LakeTable
 
 DML_OPS = ("INSERT", "UPDATE", "DELETE")
 DDL_OPS = ("TRUNCATE", "CREATE_TABLE", "DROP_TABLE", "ALTER_TABLE")
+# table property: the highest gtid of a schema DDL this table committed
+SCHEMA_DDL_GTID = "schema_ddl_gtid"
+
+
+def _schema_ddl_gtid(table: LakeTable | None) -> int:
+    if table is None:
+        return -1
+    return int(table.snapshot.properties.get(SCHEMA_DDL_GTID, "-1"))
 
 
 def ddl_candidates_cond():
@@ -334,15 +342,18 @@ class BatchApplier:
             if t is None:
                 return False  # table dropped / not created yet
             cmd = parse_alter(d["ddl"] or "")
+            # the commit records its gtid (monotonic): what a within-batch
+            # resume reads to skip the schema DDLs already applied
+            props = {SCHEMA_DDL_GTID: str(max(d["gtid"], _schema_ddl_gtid(t)))}
             try:
                 if cmd.kind == "add":
-                    t.add_column(cmd.column, cmd.type_ or "string")
+                    t.add_column(cmd.column, cmd.type_ or "string", props)
                 elif cmd.kind == "rename":
-                    t.rename_column(cmd.column, cmd.new_name)
+                    t.rename_column(cmd.column, cmd.new_name, props)
                 elif cmd.kind == "modify":
-                    t.widen_column(cmd.column, cmd.type_ or "string")
+                    t.widen_column(cmd.column, cmd.type_ or "string", props)
                 elif cmd.kind == "drop":
-                    t.drop_column(cmd.column)
+                    t.drop_column(cmd.column, props)
                 else:
                     return False
                 return True
@@ -443,14 +454,18 @@ class BatchApplier:
             wm = self.table.watermark_gtid if self.table is not None else -1
             if wm >= 0:
                 gtid_floor = wm
-                # TRUNCATE entries are kept even at/below the watermark: the
-                # marker is only committed with the batch's FINAL segment, so
-                # a crash after a later segment advanced the watermark past
-                # the TRUNCATE gtid must still persist it on resume (the
-                # marker merge in lake.merge is monotonic-max, so replaying
-                # one is always safe). Schema DDLs below the watermark were
-                # applied before the segment that advanced it, so they drop.
-                ddls = [d for d in ddls if d["gtid"] > wm or d["op"] == "TRUNCATE"]
+            # Schema DDLs at or below the watermark were applied before the
+            # segment that advanced it; those above it but at or below the
+            # last recorded schema-DDL gtid were applied after the batch's
+            # last DML (empty segments do not advance the watermark) — both
+            # drop. TRUNCATE entries are kept even at/below either: the
+            # marker is only committed with the batch's FINAL segment, so a
+            # crash after a later segment advanced the watermark past the
+            # TRUNCATE gtid must still persist it on resume (the marker
+            # merge is monotonic-max, so replaying one is always safe).
+            done = max(wm, _schema_ddl_gtid(self.table))
+            if done >= 0:
+                ddls = [d for d in ddls if d["gtid"] > done or d["op"] == "TRUNCATE"]
             if self._last_batch_id // 1024 == batch_id:
                 pos = self._last_batch_id % 1024 + 1
 

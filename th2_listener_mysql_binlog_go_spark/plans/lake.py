@@ -1748,6 +1748,12 @@ class LakeTable:
             BUCKET_COL, self.bucket_expr()
         )
         obs = Observation(f"stage-{label}-{uuid.uuid4().hex[:6]}")
+        # Append the batch as per-bucket deltas. LWW resolution happens at
+        # read/compaction time anyway (keyed on _gtid), so the write needs
+        # NO key shuffle and NO sort — one bucket-hash exchange + parquet
+        # write, the cheapest possible apply. ``mor_dedup`` optionally
+        # collapses intra-batch duplicates first (an extra key shuffle) to
+        # cut delta volume on streams with heavy per-key churn.
         winners = changes
         if mor_dedup:
             w = Window.partitionBy(*keys).orderBy(
@@ -1851,6 +1857,9 @@ class LakeTable:
         }
         if auto_compact_deltas is not None:
             if auto_compact_deltas == "auto":
+                # ~8 batches' worth of delta files: bounds per-bucket read
+                # amplification and snapshot size for untuned streams while
+                # amortizing the rewrite over many commits.
                 auto_compact_deltas = 8 * snap.num_buckets * max(files_per_bucket, 1)
             n_delta = sum(
                 1 for fi in self.snapshot.files
@@ -1871,7 +1880,6 @@ class LakeTable:
         mode: str = "cow",
         extra_properties: dict[str, str] | None = None,
         files_per_bucket: int = 1,
-        batch_gtid_max: int | None = None,
         auto_compact_deltas: int | str | None = None,
         mor_dedup: bool = False,
         compact_keep_tombstones: bool = False,
@@ -1885,13 +1893,16 @@ class LakeTable:
         resolution on the *final* op per key, so DELETE→INSERT
         resurrection within one batch lands as the INSERT.
 
-        ``mode='mor'`` appends deltas (O(batch), target never read);
-        ``mode='cow'`` rewrites affected buckets (delta-free reads,
-        exact insert/update/delete lineage). ``auto_compact_deltas``: in
-        mor mode, compact when delta-file count exceeds it.
+        ``mode='mor'`` appends deltas (O(batch), target never read) — the
+        staged write of :meth:`stage_mor_delta` committed at once by
+        :meth:`commit_staged`; ``mode='cow'`` rewrites affected buckets
+        (delta-free reads, exact insert/update/delete lineage).
+        ``auto_compact_deltas``: in mor mode, compact when delta-file
+        count exceeds it.
 
         Returns lineage metrics. Replay of an applied batch (batch_id <=
-        last_batch_id) is a no-op returning {"skipped": True}.
+        last_batch_id) is a no-op returning {"skipped": True}, checked
+        before anything is written.
         """
         import time as _time
 
@@ -1899,6 +1910,14 @@ class LakeTable:
         snap = self.snapshot
         if batch_id <= self.last_batch_id:
             return {"skipped": True, "batch_id": batch_id}
+        if mode == "mor":
+            return self.commit_staged(
+                self.stage_mor_delta(changes, files_per_bucket, mor_dedup,
+                                     label=f"merge-{batch_id}"),
+                batch_id, extra_properties, auto_compact_deltas,
+                files_per_bucket, compact_keep_tombstones)
+        if mode != "cow":
+            raise ValueError(f"unknown merge mode {mode!r}")
         keys = snap.key_names
 
         # Lenient projection: logical columns the batch doesn't carry
@@ -1916,99 +1935,56 @@ class LakeTable:
 
         new_version = snap.version + 1
         obs = Observation(f"merge-{batch_id}")
-
-        if mode == "mor":
-            # Append the batch as per-bucket deltas. LWW resolution happens
-            # at read/compaction time anyway (keyed on _gtid), so the merge
-            # itself needs NO key shuffle and NO sort — one bucket-hash
-            # exchange + parquet write, the cheapest possible apply.
-            # ``mor_dedup`` optionally collapses intra-batch duplicates
-            # first (an extra key shuffle) to cut delta volume on streams
-            # with heavy per-key churn.
-            winners = changes
-            if mor_dedup:
-                w = Window.partitionBy(*keys).orderBy(
-                    F.col(GTID_COL).desc(), F.col(SEQ_COL).desc()
-                )
-                winners = changes.withColumn("_rn", F.row_number().over(w)).filter(
-                    F.col("_rn") == 1
-                ).drop("_rn")
-            metrics = [
-                F.sum(F.when(F.col(OP_COL) != "DELETE", 1).otherwise(0)).alias("rows_upserted"),
-                F.sum(F.when(F.col(OP_COL) == "DELETE", 1).otherwise(0)).alias("rows_deleted"),
-                F.max(F.col(GTID_COL)).alias("max_gtid"),
-                F.min(F.col(GTID_COL)).alias("min_gtid"),
-            ]
-            if snap.num_buckets <= self._OBS_BUCKET_LIMIT:
-                metrics += self._bucket_count_metrics(snap.num_buckets, exclude_deletes=False)
-            commit_dir_rel = os.path.join("data", f"d{new_version:012d}-{uuid.uuid4().hex[:8]}")
-            self._write_files(winners, commit_dir_rel, with_op=True,
-                              files_per_bucket=files_per_bucket,
-                              obs=obs, metrics=metrics)
-            m = self._obs_get_safe(obs)
-            written = self._stamp_gtid_bounds(
-                self._list_commit_files(commit_dir_rel, snap.epoch, "delta"),
-                m.get("min_gtid"), m.get("max_gtid"))
-            new_files = snap.files + written
-            counts = {
-                "rows_inserted": int(m.get("rows_upserted") or 0),
-                "rows_updated": 0,
-                "rows_deleted": int(m.get("rows_deleted") or 0),
-            }
-        elif mode == "cow":
-            affected = sorted(r[0] for r in changes.select(BUCKET_COL).distinct().collect())
-            affected_set = set(affected)
-            touched = [fi for fi in snap.files if fi["bucket"] in affected_set]
-            untouched = [fi for fi in snap.files if fi["bucket"] not in affected_set]
-            target = self.read(include_meta=True, snapshot=snap.sub(touched))
-            unioned = target.withColumn(OP_COL, F.lit(_KEEP)).unionByName(changes)
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(GTID_COL).desc(), F.col(SEQ_COL).desc(),
-                (F.col(OP_COL) == _KEEP).asc(),
-            )
-            wf = Window.partitionBy(*keys).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-            ranked = unioned.withColumn("_rn", F.row_number().over(w)).withColumn(
-                "_had_target", F.max(F.when(F.col(OP_COL) == _KEEP, 1).otherwise(0)).over(wf)
-            )
-            is_change = F.col(OP_COL) != _KEEP
-            winners = ranked.filter(F.col("_rn") == 1)
-            metrics = [
-                F.sum(F.when(is_change & (F.col(OP_COL) != "DELETE") & (F.col("_had_target") == 0), 1)
-                      .otherwise(0)).alias("rows_inserted"),
-                F.sum(F.when(is_change & (F.col(OP_COL) != "DELETE") & (F.col("_had_target") == 1), 1)
-                      .otherwise(0)).alias("rows_updated"),
-                F.sum(F.when((F.col(OP_COL) == "DELETE") & (F.col("_had_target") == 1), 1)
-                      .otherwise(0)).alias("rows_deleted"),
-                F.max(F.when(is_change, F.col(GTID_COL))).alias("max_gtid"),
-                F.min(F.when(is_change, F.col(GTID_COL))).alias("min_gtid"),
-                # bounds over the rows actually WRITTEN (kept rows carry
-                # older gtids than the batch's changes)
-                F.max(F.when(F.col(OP_COL) != "DELETE", F.col(GTID_COL)))
-                .alias("w_max_gtid"),
-                F.min(F.when(F.col(OP_COL) != "DELETE", F.col(GTID_COL)))
-                .alias("w_min_gtid"),
-            ]
-            if snap.num_buckets <= self._OBS_BUCKET_LIMIT:
-                # written base rows = winners minus DELETE winners
-                metrics += self._bucket_count_metrics(snap.num_buckets, exclude_deletes=True)
-            commit_dir_rel = os.path.join("data", f"c{new_version:012d}-{uuid.uuid4().hex[:8]}")
-            self._write_files(winners, commit_dir_rel, with_op=False,
-                              files_per_bucket=files_per_bucket,
-                              obs=obs, metrics=metrics, drop_deletes=True)
-            m = self._obs_get_safe(obs)
-            written = self._stamp_gtid_bounds(
-                self._list_commit_files(commit_dir_rel, snap.epoch, "base"),
-                m.get("w_min_gtid"), m.get("w_max_gtid"))
-            new_files = untouched + written
-            counts = {
-                "rows_inserted": int(m.get("rows_inserted") or 0),
-                "rows_updated": int(m.get("rows_updated") or 0),
-                "rows_deleted": int(m.get("rows_deleted") or 0),
-            }
-        else:
-            raise ValueError(f"unknown merge mode {mode!r}")
+        affected = sorted(r[0] for r in changes.select(BUCKET_COL).distinct().collect())
+        affected_set = set(affected)
+        touched = [fi for fi in snap.files if fi["bucket"] in affected_set]
+        untouched = [fi for fi in snap.files if fi["bucket"] not in affected_set]
+        target = self.read(include_meta=True, snapshot=snap.sub(touched))
+        unioned = target.withColumn(OP_COL, F.lit(_KEEP)).unionByName(changes)
+        w = Window.partitionBy(*keys).orderBy(
+            F.col(GTID_COL).desc(), F.col(SEQ_COL).desc(),
+            (F.col(OP_COL) == _KEEP).asc(),
+        )
+        wf = Window.partitionBy(*keys).rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        ranked = unioned.withColumn("_rn", F.row_number().over(w)).withColumn(
+            "_had_target", F.max(F.when(F.col(OP_COL) == _KEEP, 1).otherwise(0)).over(wf)
+        )
+        is_change = F.col(OP_COL) != _KEEP
+        winners = ranked.filter(F.col("_rn") == 1)
+        metrics = [
+            F.sum(F.when(is_change & (F.col(OP_COL) != "DELETE") & (F.col("_had_target") == 0), 1)
+                  .otherwise(0)).alias("rows_inserted"),
+            F.sum(F.when(is_change & (F.col(OP_COL) != "DELETE") & (F.col("_had_target") == 1), 1)
+                  .otherwise(0)).alias("rows_updated"),
+            F.sum(F.when((F.col(OP_COL) == "DELETE") & (F.col("_had_target") == 1), 1)
+                  .otherwise(0)).alias("rows_deleted"),
+            F.max(F.when(is_change, F.col(GTID_COL))).alias("max_gtid"),
+            F.min(F.when(is_change, F.col(GTID_COL))).alias("min_gtid"),
+            # bounds over the rows actually WRITTEN (kept rows carry
+            # older gtids than the batch's changes)
+            F.max(F.when(F.col(OP_COL) != "DELETE", F.col(GTID_COL)))
+            .alias("w_max_gtid"),
+            F.min(F.when(F.col(OP_COL) != "DELETE", F.col(GTID_COL)))
+            .alias("w_min_gtid"),
+        ]
+        if snap.num_buckets <= self._OBS_BUCKET_LIMIT:
+            # written base rows = winners minus DELETE winners
+            metrics += self._bucket_count_metrics(snap.num_buckets, exclude_deletes=True)
+        commit_dir_rel = os.path.join("data", f"c{new_version:012d}-{uuid.uuid4().hex[:8]}")
+        self._write_files(winners, commit_dir_rel, with_op=False,
+                          files_per_bucket=files_per_bucket,
+                          obs=obs, metrics=metrics, drop_deletes=True)
+        m = self._obs_get_safe(obs)
+        written = self._stamp_gtid_bounds(
+            self._list_commit_files(commit_dir_rel, snap.epoch, "base"),
+            m.get("w_min_gtid"), m.get("w_max_gtid"))
+        counts = {
+            "rows_inserted": int(m.get("rows_inserted") or 0),
+            "rows_updated": int(m.get("rows_updated") or 0),
+            "rows_deleted": int(m.get("rows_deleted") or 0),
+        }
 
         t_write_done = _time.monotonic()
         per_bucket = self._obs_bucket_counts(m, snap.num_buckets)
@@ -2016,7 +1992,7 @@ class LakeTable:
             per_bucket = self._footer_rows(self.root, written)
         t_footer_done = _time.monotonic()
         props = dict(snap.properties)
-        batch_max = batch_gtid_max if batch_gtid_max is not None else m.get("max_gtid")
+        batch_max = m.get("max_gtid")
         if batch_max is None:
             batch_max = self.watermark_gtid
         props["watermark_gtid"] = str(max(self.watermark_gtid, batch_max))
@@ -2029,10 +2005,10 @@ class LakeTable:
         self._write_snapshot(Snapshot(
             version=new_version, columns=snap.columns, key_ids=snap.key_ids,
             num_buckets=snap.num_buckets, epoch=snap.epoch,
-            epoch_schemas=snap.epoch_schemas, files=new_files,
+            epoch_schemas=snap.epoch_schemas, files=untouched + written,
             properties=props, parent=snap.version,
         ))
-        result = {
+        return {
             "skipped": False,
             "batch_id": batch_id,
             **counts,
@@ -2048,23 +2024,6 @@ class LakeTable:
             "t_footer_s": round(t_footer_done - t_write_done, 4),
             "t_commit_s": round(_time.monotonic() - t_footer_done, 4),
         }
-        if mode == "mor" and auto_compact_deltas is not None:
-            if auto_compact_deltas == "auto":
-                # ~8 batches' worth of delta files: bounds per-bucket read
-                # amplification and snapshot size for untuned streams while
-                # amortizing the rewrite over many commits.
-                auto_compact_deltas = 8 * snap.num_buckets * max(files_per_bucket, 1)
-            n_delta = sum(
-                1 for fi in self.snapshot.files
-                # tombstone files are compaction's own steady-state output
-                # (never cleared by design) — counting them would pin the
-                # trigger past the threshold and compact EVERY batch
-                if fi.get("kind") == "delta" and not fi.get("tombstones"))
-            if n_delta > auto_compact_deltas:
-                result["compacted_buckets"] = self.compact(
-                    files_per_bucket=files_per_bucket,
-                    keep_tombstones=compact_keep_tombstones)
-        return result
 
     # ------------------------------------------- out-of-band corrections
 
@@ -2233,14 +2192,24 @@ class LakeTable:
             files=snap.files if files is None else files, properties=props, parent=snap.version,
         ))
 
-    def add_column(self, name: str, type_: str) -> None:
-        """ALTER TABLE ADD COLUMN — metadata only; old files read as NULL."""
-        if any(c.name == name for c in self.snapshot.columns):
-            raise ValueError(f"column {name} exists")
-        next_id = max(c.id for c in self.snapshot.columns) + 1
-        self._commit_meta(self.snapshot.columns + [ColumnSpec(next_id, name, type_)])
+    def add_column(self, name: str, type_: str,
+                   extra_properties: dict[str, str] | None = None) -> None:
+        """ALTER TABLE ADD COLUMN — metadata only; old files read as NULL.
 
-    def rename_column(self, old: str, new: str) -> None:
+        The new id is one past every id the table ever used: a dropped
+        column's id stays in the ``epoch_schemas`` of the files written
+        with it (they only grow), and reusing it would bring those files'
+        values back under the new column."""
+        snap = self.snapshot
+        if any(c.name == name for c in snap.columns):
+            raise ValueError(f"column {name} exists")
+        next_id = 1 + max(c.id for cols in [snap.columns, *snap.epoch_schemas.values()]
+                          for c in cols)
+        self._commit_meta(snap.columns + [ColumnSpec(next_id, name, type_)],
+                          extra_properties=extra_properties)
+
+    def rename_column(self, old: str, new: str,
+                      extra_properties: dict[str, str] | None = None) -> None:
         """ALTER TABLE RENAME COLUMN — id-stable, metadata only."""
         if not any(c.name == old for c in self.snapshot.columns):
             raise ValueError(f"no column {old}")
@@ -2248,9 +2217,10 @@ class LakeTable:
             raise ValueError(f"column {new} already exists")
         cols = [ColumnSpec(c.id, new if c.name == old else c.name, c.type, c.nullable)
                 for c in self.snapshot.columns]
-        self._commit_meta(cols)
+        self._commit_meta(cols, extra_properties=extra_properties)
 
-    def widen_column(self, name: str, new_type: str) -> None:
+    def widen_column(self, name: str, new_type: str,
+                     extra_properties: dict[str, str] | None = None) -> None:
         """ALTER TABLE ALTER COLUMN TYPE — widening only, metadata only."""
         cols = []
         found = False
@@ -2264,15 +2234,16 @@ class LakeTable:
                 cols.append(c)
         if not found:
             raise ValueError(f"no column {name}")
-        self._commit_meta(cols)
+        self._commit_meta(cols, extra_properties=extra_properties)
 
-    def drop_column(self, name: str) -> None:
+    def drop_column(self, name: str,
+                    extra_properties: dict[str, str] | None = None) -> None:
         if name in self.snapshot.key_names:
             raise ValueError("cannot drop a key column")
         cols = [c for c in self.snapshot.columns if c.name != name]
         if len(cols) == len(self.snapshot.columns):
             raise ValueError(f"no column {name}")
-        self._commit_meta(cols)
+        self._commit_meta(cols, extra_properties=extra_properties)
 
     def truncate(self, extra_properties: dict[str, str] | None = None) -> None:
         """TRUNCATE TABLE (reference op: component/bean/query.go:24) — drop all file refs."""

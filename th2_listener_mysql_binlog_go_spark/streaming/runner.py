@@ -20,6 +20,16 @@ The Spark analogue of the reference's sync loop + resume logic
   batch's ``gtid`` filter becomes partition pruning + a parquet range
   scan — no full-stream rescans per batch.
 
+One run loop serves both targets: :class:`ReplayRunner` (one LakeTable)
+and :class:`CatalogReplayRunner` (a LakeCatalog) share the bounds check,
+clamp/gap check, recorded-span guard, ``k0``/``k1`` planning, windowed DDL
+prescan, sequential and pipelined stage/commit paths, totals and lineage.
+The catalog runner overrides only the hooks that really differ: where
+progress lives (the table's own commits vs the catalog PROGRESS file),
+the watermark, the apply/stage/commit calls, and the resume condition
+(the table re-enters batch ``k`` in within-batch mode iff its
+``last_batch_id // 1024 == k``; the catalog always resumes at ``k0``).
+
 An event-driven Structured Streaming shell with ``foreachBatch`` is in
 :mod:`.structured` — batch planning there comes from the stream engine,
 while apply semantics are identical.
@@ -35,24 +45,6 @@ from pyspark.sql import functions as F
 from ..operators.apply import ApplyConfig, BatchApplier
 from ..plans.lake import LakeTable
 from .lineage import LineageWriter
-
-
-def _check_recorded_span(recorded: str | None, span: int, kind: str) -> None:
-    """Refuse a resume whose batch_span disagrees with the recorded one.
-
-    Shared by both runners so the guard (and its message) cannot drift:
-    a changed span is silently wrong in both directions — larger
-    regresses sub-batch ids below the exactly-once guard (whole run
-    no-ops), smaller re-enters applied gtids without the within-batch
-    filter (re-appended overlap). ``recorded is None`` (pre-guard
-    history, or a fresh table) passes; callers record the span on first
-    use.
-    """
-    if recorded is not None and int(recorded) != span:
-        raise ValueError(
-            f"batch_span={span} does not match this {kind}'s recorded "
-            f"replay_batch_span={recorded}; resume with the original "
-            "span (a changed span silently no-ops or re-appends batches)")
 
 
 def _ddl_windows(runner, stream: DataFrame, ks: list[int], span: int):
@@ -87,6 +79,9 @@ def _ddl_windows(runner, stream: DataFrame, ks: list[int], span: int):
 
 
 class ReplayRunner:
+    """Gtid-span replay of a change stream into one LakeTable, and the
+    run loop :class:`CatalogReplayRunner` shares through its hooks."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -257,7 +252,7 @@ class ReplayRunner:
         bounds: tuple[int, int] | None = None,
     ) -> dict:
         """Replay ``stream`` (change events, CHANGE_SCHEMA-shaped) into the
-        table from the current watermark. Returns summary metrics.
+        target from the current watermark. Returns summary metrics.
 
         ``bounds``: the stream's exact ``(min_gtid, max_gtid)`` when the
         caller already computed it — skips the discovery aggregation job
@@ -265,16 +260,13 @@ class ReplayRunner:
         are not the stream's true extremes silently mis-plan batches
         (stale hi skips the tail; stale lo over-spans), so only pass
         values measured from THIS stream."""
-        if bounds is not None:
-            b_lo, b_hi = bounds
-            bounds = {"lo": b_lo, "hi": b_hi}
-        else:
-            bounds = self._bounds(stream)
-        if bounds["lo"] is None:
+        if bounds is None:
+            b = self._bounds(stream)
+            bounds = (b["lo"], b["hi"])
+        lo, hi = bounds
+        if lo is None:
             return {"batches": 0, "events": 0}
-        lo, hi = bounds["lo"], bounds["hi"]
-        wm = self.table.watermark_gtid
-
+        wm = self.watermark_gtid
         if wm >= hi:
             return {"batches": 0, "events": 0, "clamped": True}
         if wm >= 0 and wm < lo - 1 and not allow_gaps:
@@ -286,81 +278,62 @@ class ReplayRunner:
             )
 
         span = self.batch_span
-        # Refuse a resume whose batch_span disagrees with the table's
-        # replay history. Sub-batch ids are k*1024+segment with k =
-        # gtid//span; a changed span is silently wrong in both directions:
-        # a larger span regresses k, every merge falls below the
-        # exactly-once guard, and the whole run no-ops while unapplied
-        # events sit past the watermark (found by a randomized-interleaving
-        # test); a smaller span re-enters applied gtids without the
-        # within-batch filter and re-appends the overlap (audit/changelog
-        # pollution). The span is RECORDED on the run's own batch commits
-        # (no extra snapshot version) — never inferred: no arithmetic
-        # identity over (watermark, last_batch_id) survives legitimate
-        # histories, because an empty batch advances last_batch_id without
-        # the watermark (review repro). A table with pre-guard history
-        # gets the span recorded on its first post-upgrade run — pass the
-        # original one there.
-        _check_recorded_span(
-            self.table.snapshot.properties.get("replay_batch_span"), span, "table")
-        span_prop = {"replay_batch_span": str(span)}
+        # Refuse a resume whose batch_span disagrees with the replay
+        # history. Sub-batch ids are k*1024+segment with k = gtid//span; a
+        # changed span is silently wrong in both directions: a larger span
+        # regresses k, every merge falls below the exactly-once guard, and
+        # the whole run no-ops while unapplied events sit past the
+        # watermark (found by a randomized-interleaving test); a smaller
+        # span re-enters applied gtids without the within-batch filter and
+        # re-appends the overlap (audit/changelog pollution). The span is
+        # RECORDED — never inferred: no arithmetic identity over
+        # (watermark, last_batch_id) survives legitimate histories, because
+        # an empty batch advances last_batch_id without the watermark
+        # (review repro). History from before the guard passes and gets
+        # the span recorded on first use — pass the original one there.
+        progress = self._progress()
+        recorded = progress.get("replay_batch_span")
+        if recorded is not None and int(recorded) != span:
+            raise ValueError(
+                f"batch_span={span} does not match this {self._kind}'s "
+                f"recorded replay_batch_span={recorded}; resume with the "
+                "original span (a changed span silently no-ops or "
+                "re-appends batches)")
         # A batch whose final segment committed recorded itself complete;
         # resume restarts at the *next* batch, else from the watermark's
         # batch (whose applied prefix replays as guarded no-ops).
-        done = int(self.table.snapshot.properties.get("last_complete_batch", "-1"))
+        done = int(progress.get("last_complete_batch", "-1"))
+        if recorded is None:
+            self._adopt_span(wm, done)
         k0 = max(lo // span, (wm // span) if wm >= 0 else 0, done + 1)
-
         k1 = hi // span
+        ks = list(range(k0, k1 + 1))[:max_batches]
         total = {"batches": 0, "events": 0, "rows_inserted": 0, "rows_updated": 0,
                  "rows_deleted": 0, "ddl_applied": 0}
 
-        def record(k: int, m: dict, wall_ms: int) -> None:
+        def complete(k: int) -> dict[str, str]:
+            # Only a batch the source provably extends past may be marked
+            # complete; the tail batch of an append-only source can still
+            # grow, and resume must re-enter it (within-batch mode) rather
+            # than skip it.
+            return {} if k == k1 else {"last_complete_batch": str(k)}
+
+        def record(k: int, m: dict, t0: float) -> None:
+            gtid_max = min((k + 1) * span - 1, hi)
+            self._batch_done(gtid_max, complete(k))
             total["batches"] += 1
             for key in ("rows_inserted", "rows_updated", "rows_deleted", "ddl_applied"):
                 total[key] += m[key]
             total["events"] += m["rows_inserted"] + m["rows_updated"] + m["rows_deleted"]
             if self.lineage:
-                base = {
-                    "batch_id": k, "gtid_min": k * span, "gtid_max": min((k + 1) * span - 1, hi),
-                    "rows_inserted": m["rows_inserted"], "rows_updated": m["rows_updated"],
-                    "rows_deleted": m["rows_deleted"],
-                    "rows_applied": m["rows_inserted"] + m["rows_updated"] + m["rows_deleted"],
-                    "ddl_applied": m["ddl_applied"], "wall_ms": wall_ms,
-                }
-                rows = [dict(base, partition_id=-1)]
-                # per-partition rows: files written to each bucket this batch
-                rows += [
-                    dict(base, partition_id=int(b), rows_applied=int(n))
-                    for b, n in m.get("partitions", [])
-                ]
-                self.lineage.write(rows)
-
-        ks = [k for k in range(k0, k1 + 1)]
-        if max_batches is not None:
-            ks = ks[:max_batches]
-
-        def batch_df(k: int) -> DataFrame:
-            return self.batch_df(stream, k)
+                self.lineage.write_batch(k, m, int((time.monotonic() - t0) * 1000),
+                                         k * span, gtid_max)
 
         def sequential(k: int, ddls: list) -> None:
             t0 = time.monotonic()
-            # Only a batch the source provably extends past may be marked
-            # complete; the tail batch of an append-only source can still
-            # grow, and resume must re-enter it (within-batch mode) rather
-            # than skip it.
-            m = self.applier.apply(
-                batch_df(k), batch_id=k,
-                final_extra_props=(
-                    {} if k == k1 else {"last_complete_batch": str(k)}),
-                # span rides EVERY segment commit: a crash between segments
-                # of a fresh table's first DDL-segmented batch must still
-                # leave the span recorded, or a changed-span resume slips
-                # past the guard above (review finding)
-                extra_props=span_prop,
-                precollected_ddl=ddls,
-                resume_within_batch=self.table.last_batch_id // 1024 == k,
-            )
-            record(k, m, int((time.monotonic() - t0) * 1000))
+            m = self._apply(self.batch_df(stream, k), k, ddls,
+                            self._resumes(k, k0), complete(k))
+            record(k, m, t0)
 
         # Windowed DDL pre-scan: one collect per ``prescan_window`` batches
         # (a JVM-side regex prefilter keeps non-DDL rows off the driver),
@@ -369,12 +342,11 @@ class ReplayRunner:
         windows = _ddl_windows(self, stream, ks, span)
 
         depth = self.pipeline_depth
-        can_pipeline = depth > 1 and self.applier.config.merge_mode == "mor"
-        if not can_pipeline:
+        if depth == 1 or self.applier.config.merge_mode != "mor":
             for wks, ddl_by_k in windows:
                 for k in wks:
                     sequential(k, ddl_by_k[k])
-            total["watermark_gtid"] = self.table.watermark_gtid
+            total["watermark_gtid"] = self.watermark_gtid
             return total
 
         # Pipelined mode: stage (write) up to ``depth`` no-DDL batches
@@ -391,43 +363,80 @@ class ReplayRunner:
 
         def commit_oldest() -> None:
             k, t0, fut = inflight.popleft()
-            staged = fut.result()
-            m = self.applier.commit_batch(
-                staged, k,
-                final_extra_props=dict(
-                    span_prop,
-                    **({} if k == k1 else {"last_complete_batch": str(k)})),
-            )
-            record(k, m, int((time.monotonic() - t0) * 1000))
+            record(k, self._commit(fut.result(), k, complete(k)), t0)
 
         with ThreadPoolExecutor(max_workers=depth, thread_name_prefix="cdc-stage") as ex:
             for wks, ddl_by_k in windows:
                 for k in wks:
-                    needs_seq = bool(ddl_by_k[k]) or self.table.last_batch_id // 1024 == k
-                    if needs_seq:
+                    if ddl_by_k[k] or self._resumes(k, k0):
                         while inflight:
                             commit_oldest()
                         sequential(k, ddl_by_k[k])
                         continue
                     while len(inflight) >= depth:
                         commit_oldest()
-                    inflight.append((k, time.monotonic(), ex.submit(self.applier.stage_batch, batch_df(k))))
+                    inflight.append((k, time.monotonic(),
+                                     ex.submit(self._stage, self.batch_df(stream, k))))
             while inflight:
                 commit_oldest()
-        total["watermark_gtid"] = self.table.watermark_gtid
+        total["watermark_gtid"] = self.watermark_gtid
         return total
 
+    # -------------------------------------------------- single-table hooks
+    # Progress rides the table's own merge commits: ``replay_batch_span``
+    # on EVERY segment commit (a crash between segments of a fresh table's
+    # first DDL-segmented batch must still leave the span recorded, or a
+    # changed-span resume slips past the guard), ``last_complete_batch``
+    # on the batch's final one.
 
-class CatalogReplayRunner:
+    _kind = "table"
+
+    @property
+    def watermark_gtid(self) -> int:
+        return self.table.watermark_gtid
+
+    def _progress(self) -> dict:
+        return self.table.snapshot.properties
+
+    def _adopt_span(self, wm: int, done: int) -> None:
+        """The span is recorded on the batches' own commits."""
+
+    def _resumes(self, k: int, k0: int) -> bool:
+        # a mid-batch crash leaves the table's sub-ids inside batch k
+        return self.table.last_batch_id // 1024 == k
+
+    def _apply(self, df: DataFrame, k: int, ddls: list, resume: bool,
+               complete: dict) -> dict:
+        return self.applier.apply(
+            df, batch_id=k, final_extra_props=complete,
+            extra_props={"replay_batch_span": str(self.batch_span)},
+            precollected_ddl=ddls, resume_within_batch=resume)
+
+    def _stage(self, df: DataFrame):
+        return self.applier.stage_batch(df)
+
+    def _commit(self, staged, k: int, complete: dict) -> dict:
+        return self.applier.commit_batch(
+            staged, k, final_extra_props=dict(
+                complete, replay_batch_span=str(self.batch_span)))
+
+    def _batch_done(self, gtid_max: int, complete: dict) -> None:
+        """Nothing to do: the batch's commits carried its progress."""
+
+
+class CatalogReplayRunner(ReplayRunner):
     """Multi-table replay over a :class:`~..plans.catalog.LakeCatalog`.
 
-    Same deterministic gtid-span batch planning and resume semantics as
-    :class:`ReplayRunner`, but batch progress (``watermark_gtid``,
-    ``last_complete_batch``) persists in *catalog* properties — the
-    per-table exactly-once guards (sub-batch ids, per-table watermarks)
-    make a crash-replayed batch a per-pair no-op, so a crash between the
-    last table's commit and the catalog property update just replays one
-    batch of guarded no-ops."""
+    Same deterministic gtid-span batch planning, resume semantics and
+    gtid-partitioned-archive pruning as :class:`ReplayRunner`, but batch
+    progress (``watermark_gtid``, ``last_complete_batch``,
+    ``replay_batch_span``) persists in the *catalog*'s O(1) PROGRESS file —
+    the per-table exactly-once guards (sub-batch ids, per-table
+    watermarks) make a crash-replayed batch a per-pair no-op, so a crash
+    between the last table's commit and the progress update just replays
+    one batch of guarded no-ops. The resume batch is always ``k0``."""
+
+    _kind = "catalog"
 
     def __init__(
         self,
@@ -446,182 +455,59 @@ class CatalogReplayRunner:
         up to that many consecutive DDL-free mor batches (on top of the
         within-batch pair parallelism of
         :class:`~..operators.multi.MultiTableApplier`); per-table snapshot
-        commits and the catalog property update stay strictly batch-
-        ordered. A batch carrying DDL — or the resume batch — drains the
-        pipeline and runs the sequential path, exactly like the
-        single-table runner. ``prescan_window`` bounds each DDL pre-scan
-        collect to that many batches (driver memory O(window), see
-        :class:`ReplayRunner`)."""
+        commits and the catalog progress update stay strictly batch-
+        ordered. The other options are :class:`ReplayRunner`'s."""
         from ..operators.multi import MultiTableApplier
 
-        self.spark = spark
+        super().__init__(spark, None, batch_span, None, lineage_dir,
+                         pipeline_depth, prescan_window, partition_col,
+                         partition_span, archive_root)
         self.catalog = catalog
-        self.batch_span = batch_span
         self.applier = MultiTableApplier(catalog, config)
-        self.lineage = LineageWriter(lineage_dir) if lineage_dir else None
-        self.pipeline_depth = max(1, pipeline_depth)
-        self.prescan_window = max(1, prescan_window)
-        self.partition_col = partition_col
-        self.partition_span = partition_span
-        self.archive_root = archive_root
-        self.max_prescan_rows = 0
-
-    # same gtid-partitioned-archive pruning contract as ReplayRunner
-    _partition_pred = ReplayRunner._partition_pred
-    batch_df = ReplayRunner.batch_df
-    _bounds = ReplayRunner._bounds
-    _listed_extreme_partitions = ReplayRunner._listed_extreme_partitions
-    _extreme_partition_bounds = ReplayRunner._extreme_partition_bounds
 
     @property
     def watermark_gtid(self) -> int:
         return int(self.catalog.properties.get("watermark_gtid", "-1"))
 
-    def run(self, stream: DataFrame, max_batches: int | None = None,
-            allow_gaps: bool = False,
-            bounds: tuple[int, int] | None = None) -> dict:
-        # same precomputed-bounds contract as ReplayRunner.run
-        if bounds is not None:
-            bounds = {"lo": bounds[0], "hi": bounds[1]}
-        else:
-            bounds = self._bounds(stream)
-        if bounds["lo"] is None:
-            return {"batches": 0, "events": 0}
-        lo, hi = bounds["lo"], bounds["hi"]
-        wm = self.watermark_gtid
-        if wm >= hi:
-            return {"batches": 0, "events": 0, "clamped": True}
-        if wm >= 0 and wm < lo - 1 and not allow_gaps:
-            raise RuntimeError(
-                f"source no longer covers watermark {wm} (min gtid {lo}); "
-                "pass allow_gaps=True to restart from earliest available"
-            )
+    def _progress(self) -> dict:
+        return self.catalog.properties
 
+    def _adopt_span(self, wm: int, done: int) -> None:
+        # Adopting a span for a catalog with PRE-GUARD replay history must
+        # not enshrine a typo: _batch_done always sets the watermark to its
+        # batch's end, so under the true span wm//span is the last applied
+        # batch and last_complete_batch is that or one less (growing tail)
+        # — a span that breaks the identity is provably not the one the
+        # history was built with. (A table has no such check: a mid-batch
+        # crash legitimately leaves its sub-ids ahead of the watermark.)
         span = self.batch_span
-        # Same recorded-span guard as ReplayRunner, different channel: the
-        # catalog records via the O(1) PROGRESS file (up-front, before any
-        # batch applies), the table on its own merge commits. The catalog
-        # additionally gets the pre-guard adoption sanity below, which the
-        # table cannot have (a mid-batch crash legitimately leaves table
-        # sub-ids ahead of the watermark; the catalog's record() always
-        # sets wm to its batch's end).
-        recorded = self.catalog.properties.get("replay_batch_span")
-        done = int(self.catalog.properties.get("last_complete_batch", "-1"))
-        _check_recorded_span(recorded, span, "catalog")
-        if recorded is None:
-            # Adopting a span for a catalog with PRE-GUARD replay history
-            # must not enshrine a typo: the catalog's record() always sets
-            # the watermark to its batch's end, so under the true span
-            # wm//span is the last applied batch and last_complete_batch
-            # is that or one less (growing tail) — a span that breaks the
-            # identity is provably not the one the history was built with.
-            if done >= 0 and wm >= 0 and not (0 <= wm // span - done <= 1):
-                raise ValueError(
-                    f"cannot adopt batch_span={span} for a catalog with "
-                    f"pre-guard replay history (watermark {wm} / "
-                    f"last_complete_batch {done} are inconsistent with "
-                    "it); pass the span the history was built with")
-            # rides the O(1) PROGRESS channel (merged, durable) — a
-            # registry version per run would violate the progress-channel
-            # invariant the round-3 fix pinned
-            self.catalog.set_progress({"replay_batch_span": str(span)})
-        k0 = max(lo // span, (wm // span) if wm >= 0 else 0, done + 1)
+        if done >= 0 and wm >= 0 and not (0 <= wm // span - done <= 1):
+            raise ValueError(
+                f"cannot adopt batch_span={span} for a catalog with "
+                f"pre-guard replay history (watermark {wm} / "
+                f"last_complete_batch {done} are inconsistent with "
+                "it); pass the span the history was built with")
+        # recorded up-front, before any batch applies, on the O(1)
+        # PROGRESS channel (merged, durable) — a registry version per run
+        # would violate the progress-channel invariant
+        self.catalog.set_progress({"replay_batch_span": str(span)})
 
-        k1 = hi // span
-        total = {"batches": 0, "events": 0, "rows_inserted": 0, "rows_updated": 0,
-                 "rows_deleted": 0, "ddl_applied": 0}
+    def _resumes(self, k: int, k0: int) -> bool:
+        return k == k0
 
-        ks = list(range(k0, k1 + 1))
-        if max_batches is not None:
-            ks = ks[:max_batches]
+    def _apply(self, df: DataFrame, k: int, ddls: list, resume: bool,
+               complete: dict) -> dict:
+        return self.applier.apply(df, batch_id=k, precollected_ddl=ddls,
+                                  resume_within_batch=resume)
 
-        def batch_df(k: int) -> DataFrame:
-            return self.batch_df(stream, k)
+    def _stage(self, df: DataFrame):
+        return self.applier.stage_pairs(df, self.applier.config.observed_pairs())
 
-        def record(k: int, m: dict, wall_ms: int) -> None:
-            props = {"watermark_gtid": str(min(hi, (k + 1) * span - 1))}
-            if k != k1:
-                # only a batch the source provably extends past is complete;
-                # a growing tail batch must be re-entered on resume
-                props["last_complete_batch"] = str(k)
-            # O(1) progress channel: one atomically-swapped PROGRESS file,
-            # not a full registry version per batch (a 10^5-batch replay
-            # would otherwise leave 10^5 registry dumps; round-3 review #3)
-            self.catalog.set_progress(props)
-            total["batches"] += 1
-            for key in ("rows_inserted", "rows_updated", "rows_deleted", "ddl_applied"):
-                total[key] += m[key]
-            total["events"] += m["rows_inserted"] + m["rows_updated"] + m["rows_deleted"]
-            if self.lineage:
-                rows = []
-                for tname, tm in m["tables"].items():
-                    base = {
-                        "batch_id": k, "gtid_min": k * span,
-                        "gtid_max": min((k + 1) * span - 1, hi),
-                        "rows_inserted": tm["rows_inserted"],
-                        "rows_updated": tm["rows_updated"],
-                        "rows_deleted": tm["rows_deleted"],
-                        "rows_applied": tm["rows_inserted"] + tm["rows_updated"] + tm["rows_deleted"],
-                        "ddl_applied": tm["ddl_applied"], "wall_ms": wall_ms,
-                        "table_name": tname,
-                    }
-                    rows.append(dict(base, partition_id=-1))
-                    rows += [
-                        dict(base, partition_id=int(b), rows_applied=int(n))
-                        for b, n in tm.get("partitions", [])
-                    ]
-                self.lineage.write(rows)
+    def _commit(self, staged, k: int, complete: dict) -> dict:
+        return self.applier.commit_pairs(staged, k)
 
-        def sequential(k: int, ddls: list) -> None:
-            t0 = time.monotonic()
-            m = self.applier.apply(
-                batch_df(k), batch_id=k,
-                precollected_ddl=ddls,
-                resume_within_batch=(k == k0),
-            )
-            record(k, m, int((time.monotonic() - t0) * 1000))
-
-        windows = _ddl_windows(self, stream, ks, span)
-
-        depth = self.pipeline_depth
-        cfg = self.applier.config
-        can_pipeline = depth > 1 and cfg.merge_mode == "mor"
-        if not can_pipeline:
-            for wks, ddl_by_k in windows:
-                for k in wks:
-                    sequential(k, ddl_by_k[k])
-            total["watermark_gtid"] = self.watermark_gtid
-            return total
-
-        # Pipelined mode: stage up to ``depth`` DDL-free batches' per-pair
-        # delta writes concurrently (each stage itself fans out across
-        # pairs); commit (per-table snapshots + catalog props) strictly in
-        # batch order on this thread. DDL batches and the resume batch
-        # drain the pipeline and run sequentially.
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        pairs = cfg.observed_pairs()
-        inflight: deque = deque()  # (k, t_submit, future -> {pair: staged})
-
-        def commit_oldest() -> None:
-            k, t0, fut = inflight.popleft()
-            m = self.applier.commit_pairs(fut.result(), k)
-            record(k, m, int((time.monotonic() - t0) * 1000))
-
-        with ThreadPoolExecutor(max_workers=depth, thread_name_prefix="cdc-cstage") as ex:
-            for wks, ddl_by_k in windows:
-                for k in wks:
-                    if ddl_by_k[k] or k == k0:
-                        while inflight:
-                            commit_oldest()
-                        sequential(k, ddl_by_k[k])
-                        continue
-                    while len(inflight) >= depth:
-                        commit_oldest()
-                    inflight.append((k, time.monotonic(),
-                                     ex.submit(self.applier.stage_pairs, batch_df(k), pairs)))
-            while inflight:
-                commit_oldest()
-        total["watermark_gtid"] = self.watermark_gtid
-        return total
+    def _batch_done(self, gtid_max: int, complete: dict) -> None:
+        # O(1) progress channel: one atomically-swapped PROGRESS file, not
+        # a full registry version per batch (a 10^5-batch replay would
+        # otherwise leave 10^5 registry dumps)
+        self.catalog.set_progress(dict(complete, watermark_gtid=str(gtid_max)))

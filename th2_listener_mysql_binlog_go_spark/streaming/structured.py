@@ -7,6 +7,13 @@ new binlog segments), ``maxFilesPerTrigger`` paces micro-batches, the
 checkpointLocation persists source offsets, and ``foreachBatch`` hands
 each micro-batch to the same :class:`BatchApplier` used in batch replay.
 
+One epoch handler serves all four apply shells (parquet and wire, one
+table and a catalog): it pins the handoff, persists the micro-batch,
+splits off undecodable wire messages when a quarantine dir is set,
+applies, writes lineage and refreshes views. Table and catalog shells
+differ only in the apply call, ``_handoff_state`` and the view refresh;
+parquet and wire shells only in their reader (:func:`_read_source`).
+
 Exactly-once composition: Structured Streaming replays the last
 in-flight epoch after a crash with the *same* epoch id; the applier's
 monotonic sub-batch guard (epoch_id * 1024 + segment vs the table's
@@ -38,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -182,6 +190,46 @@ def _quarantine_split(pinned, quarantine_dir: str, epoch_id: int, ns: str):
             .drop("_undecodable", "_reason", "_payload"))
 
 
+# Position metadata the reference attaches to every published message
+# (name/pos/seq/timestamp, the reference's component/listener/listener.go:325-332)
+# plus the serialized bean payload itself. part_idx identifies the part of a
+# split oversized event (batched publisher); unbatched producers omit it and
+# the JSON reader fills NULL, which decode_stream treats as part 0.
+WIRE_SCHEMA = ("gtid bigint, log_name string, log_pos bigint, part_idx int, "
+               "seq bigint, ts bigint, payload string")
+
+
+def _read_source(spark: SparkSession, source_dir: str,
+                 max_files_per_trigger: int | None,
+                 schema_ddl: str | None = None, row_ddl: str | None = None,
+                 quarantine: bool = False):
+    """Tail ``source_dir``: CHANGE_SCHEMA-shaped parquet read under
+    ``schema_ddl`` when given, else JSON-lines wire payloads (WIRE_SCHEMA
+    envelope) decoded to change rows of ``row_ddl`` (default: the
+    repo-table shape) by :func:`~..sources.rawjson.decode_stream` — pure
+    Catalyst ``from_json`` + explode inside the streaming plan."""
+    reader = spark.readStream.schema(schema_ddl or WIRE_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if schema_ddl is not None:
+        return reader.parquet(source_dir)
+    from ..sources.rawjson import _ROW_DDL, decode_stream
+
+    return decode_stream(reader.json(source_dir), row_ddl or _ROW_DDL,
+                         quarantine=quarantine)
+
+
+def _foreach_batch(stream, handle, checkpoint_dir: str,
+                   available_now: bool) -> StreamingQuery:
+    writer = (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 class StreamingApplier:
     def __init__(
         self,
@@ -248,17 +296,17 @@ class StreamingApplier:
         """Tail ``source_dir`` (parquet change events, CHANGE_SCHEMA shape)
         and apply each micro-batch. ``available_now=True`` drains what
         exists and stops — the batch-replay-of-a-stream mode; otherwise
-        runs continuously. ``resume_from_table=True`` hands off a table
-        bootstrapped by ReplayRunner (see module docstring): epoch ids
+        runs continuously. ``resume_from_table=True`` hands off a target
+        bootstrapped by a replay runner (see module docstring): epoch ids
         offset past the backfill's sub-batches, and DML at or below the
         backfill watermark is filtered (TRUNCATE markers pass — their
         merge is monotonic-max, replay-safe)."""
-        reader = self.spark.readStream.schema(schema_ddl)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(source_dir)
+        stream = _read_source(self.spark, source_dir, max_files_per_trigger,
+                              schema_ddl=schema_ddl)
         return self._start(stream, checkpoint_dir, available_now,
                            resume_from_table=resume_from_table)
+
+    # ------------------------------------------------- single-table hooks
 
     def _handoff_state(self) -> tuple[int, int]:
         """(epoch_base, gtid_floor) from the table's own checkpoint state:
@@ -267,6 +315,18 @@ class StreamingApplier:
         t = self.applier.table
         base = t.last_batch_id // 1024 + 1 if t.last_batch_id >= 0 else 0
         return base, t.watermark_gtid
+
+    def _apply_epoch(self, batch_df, epoch_id: int) -> dict:
+        return self.applier.apply(
+            batch_df, batch_id=epoch_id,
+            final_extra_props={"last_complete_batch": str(epoch_id)})
+
+    def _refresh_views(self) -> None:
+        from ..plans.matview import refresh_all
+
+        refresh_all(self.views)
+
+    # ------------------------------------------------- the epoch handler
 
     def _start(self, stream, checkpoint_dir: str, available_now: bool,
                resume_from_table: bool = False,
@@ -282,64 +342,29 @@ class StreamingApplier:
             stream = _handoff_filtered(stream, gtid_floor)
 
         def handle(batch_df, epoch_id: int) -> None:
-            import time
-
             epoch_id = int(epoch_id) + epoch_base
             t0 = time.monotonic()
-            # pin the decoded micro-batch: the apply consumes it at least
-            # twice (the DDL-candidate collect, then every segment's
-            # flatten) and for the wire shell each pass would otherwise
+            # pin the micro-batch: the apply consumes it at least twice
+            # (the DDL-candidate collect, then every segment's or pair's
+            # flatten) and for the wire shells each pass would otherwise
             # re-run the from_json decode of the whole epoch
             pinned = batch_df.persist()
-            if quarantine_dir is not None:
-                batch_df = _quarantine_split(
-                    pinned, quarantine_dir, int(epoch_id),
-                    _quarantine_namespace(checkpoint_dir))
-            else:
-                batch_df = pinned
             try:
-                m = self.applier.apply(
-                    batch_df, batch_id=int(epoch_id),
-                    final_extra_props={"last_complete_batch": str(int(epoch_id))},
-                )
+                if quarantine_dir is not None:
+                    batch_df = _quarantine_split(
+                        pinned, quarantine_dir, epoch_id,
+                        _quarantine_namespace(checkpoint_dir))
+                else:
+                    batch_df = pinned
+                m = self._apply_epoch(batch_df, epoch_id)
             finally:
                 pinned.unpersist()
             if self.lineage:
-                wall_ms = int((time.monotonic() - t0) * 1000)
-                base = {
-                    "batch_id": int(epoch_id),
-                    "gtid_min": None, "gtid_max": None,
-                    "rows_inserted": m["rows_inserted"], "rows_updated": m["rows_updated"],
-                    "rows_deleted": m["rows_deleted"],
-                    "rows_applied": m["rows_inserted"] + m["rows_updated"] + m["rows_deleted"],
-                    "ddl_applied": m["ddl_applied"], "wall_ms": wall_ms,
-                }
-                rows = [dict(base, partition_id=-1)] + [
-                    dict(base, partition_id=int(b), rows_applied=int(n))
-                    for b, n in m.get("partitions", [])
-                ]
-                self.lineage.write(rows)
-            if self.views and int(epoch_id) % self.view_refresh_every == 0:
-                from ..plans.matview import refresh_all
+                self.lineage.write_batch(epoch_id, m, int((time.monotonic() - t0) * 1000))
+            if self.views and epoch_id % self.view_refresh_every == 0:
+                self._refresh_views()
 
-                refresh_all(self.views)
-
-        writer = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-
-# Position metadata the reference attaches to every published message
-# (name/pos/seq/timestamp, /root/reference/component/listener/listener.go:325-332)
-# plus the serialized bean payload itself. part_idx identifies the part of a
-# split oversized event (batched publisher); unbatched producers omit it and
-# the JSON reader fills NULL, which decode_stream treats as part 0.
-WIRE_SCHEMA = ("gtid bigint, log_name string, log_pos bigint, part_idx int, "
-               "seq bigint, ts bigint, payload string")
+        return _foreach_batch(stream, handle, checkpoint_dir, available_now)
 
 
 class StreamingWireApplier(StreamingApplier):
@@ -377,24 +402,23 @@ class StreamingWireApplier(StreamingApplier):
         ``quarantine_dir`` dead-letters undecodable messages there as
         parquet envelopes instead of silently dropping them (the
         reference logs-and-skips; see :func:`_quarantine_split`)."""
-        from ..sources.rawjson import _ROW_DDL, decode_stream
-
-        reader = self.spark.readStream.schema(WIRE_SCHEMA)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        raw = reader.json(source_dir)
-        decoded = decode_stream(raw, row_ddl or _ROW_DDL,
-                                quarantine=quarantine_dir is not None)
-        return self._start(decoded, checkpoint_dir, available_now,
+        stream = _read_source(self.spark, source_dir, max_files_per_trigger,
+                              row_ddl=row_ddl, quarantine=quarantine_dir is not None)
+        return self._start(stream, checkpoint_dir, available_now,
                            resume_from_table=resume_from_table,
                            quarantine_dir=quarantine_dir)
 
 
-class StreamingCatalogApplier:
+class StreamingCatalogApplier(StreamingApplier):
     """Multi-table streaming shell: the same foreachBatch loop fanned out
     over a :class:`~..plans.catalog.LakeCatalog` — every observed
     (schema, table) pair applies per epoch, CREATE/DROP TABLE execute in
-    GTID order (see :class:`~..operators.multi.MultiTableApplier`)."""
+    GTID order (see :class:`~..operators.multi.MultiTableApplier`).
+    ``resume_from_table=True`` hands off a catalog bootstrapped by
+    CatalogReplayRunner: the epoch base clears EVERY table's last
+    sub-batch, the gtid floor is the catalog's replay watermark, and
+    catalog DDL at or below the floor is filtered like DML (re-applying
+    part of a CREATE/DROP pair could resurrect a dropped table)."""
 
     def __init__(
         self,
@@ -427,7 +451,6 @@ class StreamingCatalogApplier:
         self.view_refresh_every = max(1, view_refresh_every)
         self._by_view_root = {
             os.path.realpath(v.table.root): v for v in self.views}
-        by_view_root = self._by_view_root
         dir_to_pair = {
             os.path.realpath(os.path.join(catalog.root, e["dir"])): k
             for k, e in catalog.registry["tables"].items()
@@ -436,7 +459,7 @@ class StreamingCatalogApplier:
         self._view_sources: dict[str, tuple[str, str, str]] = {}
         for v in self.views:
             src = os.path.realpath(v.source.root)
-            if src in by_view_root:
+            if src in self._by_view_root:
                 self._view_sources[os.path.realpath(v.table.root)] = ("view", src, "")
             elif src in dir_to_pair:
                 self._view_sources[os.path.realpath(v.table.root)] = (
@@ -451,11 +474,10 @@ class StreamingCatalogApplier:
         from ..plans.matview import refresh_all
 
         cat = self.applier.catalog
-        by_view_root = self._by_view_root
         for v in self.views:
             kind, src, pair = self._view_sources[os.path.realpath(v.table.root)]
             if kind == "view":
-                v.source = by_view_root[src].table
+                v.source = self._by_view_root[src].table
                 continue
             ent = cat.registry["tables"].get(pair)
             if (ent is None or ent.get("dropped")
@@ -467,25 +489,7 @@ class StreamingCatalogApplier:
             v.source = LakeTable.load(self.spark, src)
         refresh_all(self.views)
 
-    def start(
-        self,
-        source_dir: str,
-        checkpoint_dir: str,
-        schema_ddl: str,
-        available_now: bool = True,
-        max_files_per_trigger: int | None = None,
-        resume_from_table: bool = False,
-    ) -> StreamingQuery:
-        """``resume_from_table=True`` hands off a catalog bootstrapped by
-        CatalogReplayRunner (module docstring): the epoch base clears
-        EVERY table's last sub-batch, the gtid floor is the catalog's
-        replay watermark."""
-        reader = self.spark.readStream.schema(schema_ddl)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(source_dir)
-        return self._start(stream, checkpoint_dir, available_now,
-                           resume_from_table=resume_from_table)
+    _refresh_views = _rebind_and_refresh_views
 
     def _handoff_state(self) -> tuple[int, int]:
         """The catalog's replay watermark only advances AFTER a whole
@@ -516,64 +520,8 @@ class StreamingCatalogApplier:
         base = last // 1024 + 1 if last >= 0 else 0
         return base, floor
 
-    def _start(self, stream, checkpoint_dir: str, available_now: bool,
-               resume_from_table: bool = False,
-               quarantine_dir: str | None = None) -> StreamingQuery:
-        epoch_base, gtid_floor = (0, -1)
-        if resume_from_table:
-            epoch_base, gtid_floor = _pin_handoff(
-                checkpoint_dir, *self._handoff_state())
-        if gtid_floor >= 0:
-            # catalog DDL at or below the floor is FILTERED like DML
-            # (re-applying part of a CREATE/DROP pair could resurrect a
-            # dropped table); TRUNCATEs are exempt — see _handoff_filtered
-            stream = _handoff_filtered(stream, gtid_floor)
-
-        def handle(batch_df, epoch_id: int) -> None:
-            import time
-
-            epoch_id = int(epoch_id) + epoch_base
-            t0 = time.monotonic()
-            pinned = None
-            if quarantine_dir is not None:
-                pinned = batch_df.persist()
-                batch_df = _quarantine_split(
-                    pinned, quarantine_dir, int(epoch_id),
-                    _quarantine_namespace(checkpoint_dir))
-            try:
-                m = self.applier.apply(batch_df, batch_id=int(epoch_id))
-            finally:
-                if pinned is not None:
-                    pinned.unpersist()
-            if self.lineage:
-                wall_ms = int((time.monotonic() - t0) * 1000)
-                rows = []
-                for tname, tm in m["tables"].items():
-                    base = {
-                        "batch_id": int(epoch_id), "gtid_min": None, "gtid_max": None,
-                        "rows_inserted": tm["rows_inserted"],
-                        "rows_updated": tm["rows_updated"],
-                        "rows_deleted": tm["rows_deleted"],
-                        "rows_applied": tm["rows_inserted"] + tm["rows_updated"] + tm["rows_deleted"],
-                        "ddl_applied": tm["ddl_applied"], "wall_ms": wall_ms,
-                        "table_name": tname,
-                    }
-                    rows.append(dict(base, partition_id=-1))
-                    rows += [
-                        dict(base, partition_id=int(b), rows_applied=int(n))
-                        for b, n in tm.get("partitions", [])
-                    ]
-                self.lineage.write(rows)
-            if self.views and int(epoch_id) % self.view_refresh_every == 0:
-                self._rebind_and_refresh_views()
-
-        writer = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    def _apply_epoch(self, batch_df, epoch_id: int) -> dict:
+        return self.applier.apply(batch_df, batch_id=epoch_id)
 
 
 class StreamingWireCatalogApplier(StreamingCatalogApplier):
@@ -597,20 +545,15 @@ class StreamingWireCatalogApplier(StreamingCatalogApplier):
         resume_from_table: bool = False,
         quarantine_dir: str | None = None,
     ) -> StreamingQuery:
-        from ..sources.rawjson import _ROW_DDL, decode_stream
-
-        reader = self.spark.readStream.schema(WIRE_SCHEMA)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        raw = reader.json(source_dir)
-        decoded = decode_stream(raw, row_ddl or _ROW_DDL,
-                                quarantine=quarantine_dir is not None)
-        return self._start(decoded, checkpoint_dir, available_now,
+        stream = _read_source(self.spark, source_dir, max_files_per_trigger,
+                              row_ddl=row_ddl, quarantine=quarantine_dir is not None)
+        return self._start(stream, checkpoint_dir, available_now,
                            resume_from_table=resume_from_table,
                            quarantine_dir=quarantine_dir)
 
 
 class StreamingWirePublisher:
+
     """The reference's PRODUCING role, Spark-native: tail a CHANGE_SCHEMA
     parquet directory (binlog segments) and PUBLISH size-bounded bean-JSON
     wire payloads as JSON-lines files — the directory-as-queue analogue of
@@ -655,11 +598,6 @@ class StreamingWirePublisher:
     ) -> StreamingQuery:
         from ..sources.rawjson import encode_stream_batched
 
-        reader = self.spark.readStream.schema(schema_ddl)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(source_dir)
-
         def handle(batch_df, epoch_id: int) -> None:
             (
                 encode_stream_batched(batch_df, self.max_size, self.base_size,
@@ -667,13 +605,9 @@ class StreamingWirePublisher:
                 .write.mode("append").json(out_dir)
             )
 
-        writer = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        stream = _read_source(self.spark, source_dir, max_files_per_trigger,
+                              schema_ddl=schema_ddl)
+        return _foreach_batch(stream, handle, checkpoint_dir, available_now)
 
 
 class ChangesFeedPublisher:
