@@ -156,3 +156,41 @@ def test_time_travel_and_compact(spark, tmp_path):
     n = t.compact()
     assert n >= 0
     assert {r["content"] for r in t.read().collect()} == {"v2", "v3"}
+
+
+def test_bucket_count_metrics_build_cost_is_flat_in_buckets(spark, monkeypatch):
+    """The per-bucket row counts are one aggregate parsed from one SQL
+    string: building them makes as many Column calls at 512 buckets (the
+    Observation limit) as at 16."""
+    from pyspark.sql.classic.column import Column
+
+    made = []
+    init = Column.__init__
+
+    def counting(self, jc):
+        made.append(jc)
+        init(self, jc)
+
+    monkeypatch.setattr(Column, "__init__", counting)
+    calls = {}
+    for n in (16, LakeTable._OBS_BUCKET_LIMIT):
+        made.clear()
+        LakeTable._bucket_count_metrics(n, exclude_deletes=True)
+        calls[n] = len(made)
+    assert calls[16] == calls[LakeTable._OBS_BUCKET_LIMIT] >= 1
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_bucket_counts_match_the_written_files(spark, tmp_path, mode):
+    """The Observation's per-bucket counts equal the rows in each bucket's
+    written files (DELETE rows kept in MOR deltas, dropped by CoW)."""
+    t = _mk(spark, tmp_path, buckets=8)
+    t.merge(_changes(spark, [(f"r{i}", f"f{i}.py", "c", "py", "v", "INSERT", i + 1)
+                             for i in range(40)]), batch_id=1, mode=mode)
+    before = {fi["path"] for fi in t.snapshot.files}
+    m = t.merge(_changes(spark, [
+        (f"r{i}", f"f{i}.py", "c", "py", "w", "UPDATE" if i % 2 else "DELETE", 100 + i)
+        for i in range(0, 40, 3)]), batch_id=2, mode=mode)
+    written = [fi for fi in t.snapshot.files if fi["path"] not in before]
+    assert dict(m["partitions"]) == LakeTable._footer_rows(t.root, written)
+    assert sum(n for _, n in m["partitions"]) > 0

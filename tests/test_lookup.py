@@ -1,6 +1,8 @@
 """Bucket-pruned point lookup: one key's read opens only its bucket's
 files, under MOR deltas, time travel, and bucket-count evolution."""
 
+import pytest
+
 from th2_listener_mysql_binlog_go_spark.plans.lake import LakeTable
 
 SCHEMA = [("repo", "string"), ("path", "string"), ("commit", "string"),
@@ -120,7 +122,6 @@ def test_lookup_many_batch_point_read(spark, tmp_path):
 
     # empty probe set and wrong arity are explicit
     assert t.lookup_many([]).collect() == []
-    import pytest
     with pytest.raises(ValueError, match="expected 2 key values"):
         t.lookup_many([("only-one",)])
 
@@ -156,3 +157,112 @@ def test_lookup_many_membership_pushes_into_scans(spark, tmp_path):
         assert ("In(repo" in ln or "EqualTo(repo" in ln), ln
         assert ("In(path" in ln or "EqualTo(path" in ln), ln
     assert "Window" in plan  # the dirty bucket resolves LWW; filters still pushed
+
+
+def _two_batch_table(spark, tmp_path):
+    """r0..r23 inserted in one MOR commit, then r3 updated (v3 -> v3b)."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA,
+                         ["repo", "path"], num_buckets=8)
+    t.merge(_batch(spark, [(f"r{i}", f"f{i}.py", f"c{i}", "py", f"v{i}",
+                            "INSERT", i + 1) for i in range(24)]),
+            batch_id=1, mode="mor")
+    t.merge(_batch(spark, [("r3", "f3.py", "c3b", "py", "v3b", "UPDATE", 30)]),
+            batch_id=2, mode="mor")
+    return t
+
+
+def test_lookup_reuses_the_bucket_plan(spark, tmp_path, monkeypatch):
+    """A second lookup on the same snapshot bucket builds no read plan:
+    only the key filter is new, and it still answers each key."""
+    t = _two_batch_table(spark, tmp_path)
+    keys = [(f"r{i}", f"f{i}.py") for i in range(24)]
+    buckets = t.key_buckets(keys)
+    b = buckets[3]
+    peer = next(k for k, kb in zip(keys, buckets) if kb == b and k != keys[3])
+    assert t.lookup("r3", "f3.py", bucket=b).collect()[0]["content"] == "v3b"
+
+    calls = []
+    read_mapped = LakeTable._read_mapped
+
+    def counting(self, *args, **kwargs):
+        calls.append(args)
+        return read_mapped(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_read_mapped", counting)
+    assert t.lookup("r3", "f3.py", bucket=b).collect()[0]["content"] == "v3b"
+    got = t.lookup(*peer).collect()
+    assert [r["content"] for r in got] == [f"v{peer[0][1:]}"]
+    assert calls == []
+    # include_meta is another plan
+    meta = t.lookup("r3", "f3.py", bucket=b, include_meta=True).collect()
+    assert calls and meta[0]["_gtid"] == 30
+
+
+def _commit(t, spark):
+    t.merge(_batch(spark, [("r3", "f3.py", "c3c", "py", "v3c", "UPDATE", 40)]),
+            batch_id=3, mode="mor")
+    return {}, lambda rows: [r["content"] for r in rows] == ["v3c"]
+
+
+def _add_column(t, spark):
+    t.add_column("stars", "int")
+    return {}, lambda rows: (len(rows) == 1 and rows[0]["stars"] is None
+                             and rows[0]["content"] == "v3b")
+
+
+def _rename_column(t, spark):
+    t.rename_column("content", "body")
+    return {}, lambda rows: [r["body"] for r in rows] == ["v3b"]
+
+
+def _drop_column(t, spark):
+    t.drop_column("lang")
+    return {}, lambda rows: (len(rows) == 1 and "lang" not in rows[0].asDict()
+                             and rows[0]["content"] == "v3b")
+
+
+def _truncate(t, spark):
+    t.truncate()
+    return {}, lambda rows: rows == []
+
+
+def _time_travel(t, spark):
+    return ({"snapshot": t.snapshot_at(t.snapshot.version - 1)},
+            lambda rows: [r["content"] for r in rows] == ["v3"])
+
+
+def _sub_snapshot(t, spark):
+    # the head version without the update's delta file
+    first = {fi["path"] for fi in t.snapshot_at(t.snapshot.version - 1).files}
+    sub = t.snapshot.sub([fi for fi in t.snapshot.files if fi["path"] in first])
+    assert sub.version == t.snapshot.version
+    return {"snapshot": sub}, lambda rows: [r["content"] for r in rows] == ["v3"]
+
+
+def _branch(t, spark):
+    # the branch and main each commit one version past the fork, so both
+    # snapshots share a version number and differ in files
+    bt = t.create_branch("audit")
+    bt.merge(_batch(spark, [("r3", "f3.py", "cb", "py", "v3-branch", "UPDATE", 50)]),
+             batch_id=3, mode="mor")
+    t.merge(_batch(spark, [("r3", "f3.py", "cm", "py", "v3-main", "UPDATE", 51)]),
+            batch_id=3, mode="mor")
+    assert bt.snapshot.version == t.snapshot.version
+    assert [r["content"] for r in t.lookup("r3", "f3.py").collect()] == ["v3-main"]
+    return ({"snapshot": bt.snapshot},
+            lambda rows: [r["content"] for r in rows] == ["v3-branch"])
+
+
+@pytest.mark.parametrize("change", [
+    _commit, _add_column, _rename_column, _drop_column, _truncate,
+    _time_travel, _sub_snapshot, _branch,
+], ids=lambda f: f.__name__.strip("_"))
+def test_lookup_never_returns_a_stale_plan(spark, tmp_path, change):
+    """After a lookup fills the plan memo, a new commit, an ALTER, a
+    TRUNCATE, time travel, a sub-snapshot of the same version and a
+    branch each answer from their own snapshot."""
+    t = _two_batch_table(spark, tmp_path)
+    assert [r["content"] for r in t.lookup("r3", "f3.py").collect()] == ["v3b"]
+    kwargs, ok = change(t, spark)
+    rows = t.lookup("r3", "f3.py", **kwargs).collect()
+    assert ok(rows), rows

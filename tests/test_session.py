@@ -1,0 +1,16 @@
+"""build_session's defaults, read off the builder without starting a JVM."""
+
+from pyspark.sql import SparkSession
+
+from th2_listener_mysql_binlog_go_spark.session import build_session
+
+FLAG = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_call_site_capture_off_by_default_and_extra_conf_overrides(monkeypatch):
+    # getOrCreate would start (or reconfigure) a session: return the
+    # options the builder was given instead
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        lambda self: dict(self._options))
+    assert build_session()[FLAG] == "false"
+    assert build_session(extra_conf={FLAG: "true"})[FLAG] == "true"

@@ -2,6 +2,8 @@
 foreachBatch, converge to the oracle state, then resume after new files."""
 
 import os
+import threading
+import time
 
 from th2_listener_mysql_binlog_go_spark.plans.lake import LakeTable
 from th2_listener_mysql_binlog_go_spark.sources.changestream import (
@@ -520,3 +522,95 @@ def test_streaming_catalog_maintains_views(spark, tmp_path):
     cat.create_table("repos", "files", SCHEMA, ["repo", "path"], num_buckets=4)
     with pytest.raises(RuntimeError, match="dropped or recycled"):
         sca._rebind_and_refresh_views()
+
+
+class _SlowFirstEpoch(StreamingApplier):
+    """Holds its first epoch open until ``stop()`` has begun, so the stop
+    always lands during an in-flight apply."""
+
+    def __init__(self, *a, **kw):
+        super().__init__(*a, **kw)
+        self.in_epoch = threading.Event()
+
+    def _apply_epoch(self, batch_df, epoch_id):
+        if not self.in_epoch.is_set():
+            self.in_epoch.set()
+            deadline = time.monotonic() + 120
+            while not self._stopping and time.monotonic() < deadline:
+                time.sleep(0.05)
+        return super()._apply_epoch(batch_df, epoch_id)
+
+
+def test_stop_lets_the_in_flight_epoch_commit(spark, tmp_path):
+    """stop() called during a slow epoch waits for it: the stop returns
+    without error and the epoch's commit is in the table."""
+    src = str(tmp_path / "events")
+    full = synthetic_changestream(spark, 600, n_repos=10, n_paths=20)
+    full.write.parquet(src)
+    table = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=4)
+    sa = _SlowFirstEpoch(spark, table)
+    q = sa.start(src, str(tmp_path / "ckpt"), CHANGE_SCHEMA, available_now=False)
+    assert sa.in_epoch.wait(120)
+    sa.stop(q)
+    assert not q.isActive and q.exception() is None and sa.refused_epoch is None
+    t2 = LakeTable.load(spark, table.root)
+    assert t2.last_batch_id // 1024 == 0
+    expected = state_fingerprint(replay_oracle(_oracle_events(full)))
+    assert df_fingerprint([r.asDict() for r in t2.read().collect()]) == expected
+
+
+def test_stop_refuses_the_next_epoch_and_it_replays(spark, tmp_path):
+    """A file lands during the slow epoch, so the engine starts another
+    epoch once that one returns. The shell refuses it without applying
+    anything, the stop still returns, and a restart on the same checkpoint
+    replays the refused epoch to the oracle state."""
+    src, stage = str(tmp_path / "events"), str(tmp_path / "stage")
+    full = synthetic_changestream(spark, 600, n_repos=10, n_paths=20)
+    full.filter("gtid < 300").write.parquet(src)
+    table = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=4)
+    sa = _SlowFirstEpoch(spark, table)
+    q = sa.start(src, str(tmp_path / "ckpt"), CHANGE_SCHEMA, available_now=False)
+    assert sa.in_epoch.wait(120)
+    full.filter("gtid >= 300").coalesce(1).write.parquet(stage)
+    for name in os.listdir(stage):
+        if name.endswith(".parquet"):
+            os.rename(os.path.join(stage, name), os.path.join(src, "late-" + name))
+
+    class RefusalFirst:
+        """Delays query.stop() until the shell has refused the next epoch,
+        so the refusal path runs on every test run, not only on a race."""
+
+        def stop(self):
+            deadline = time.monotonic() + 120
+            while sa.refused_epoch is None and time.monotonic() < deadline:
+                time.sleep(0.05)
+            q.stop()
+
+    sa.stop(RefusalFirst())
+    assert not q.isActive and sa.refused_epoch == 1
+    assert "the shell is stopping" in str(q.exception())
+    t1 = LakeTable.load(spark, table.root)
+    assert t1.last_batch_id // 1024 == 0
+    part1 = state_fingerprint(replay_oracle(_oracle_events(full.filter("gtid < 300"))))
+    assert df_fingerprint([r.asDict() for r in t1.read().collect()]) == part1
+
+    sa2 = StreamingApplier(spark, t1)
+    q2 = sa2.start(src, str(tmp_path / "ckpt"), CHANGE_SCHEMA, available_now=True)
+    q2.awaitTermination(300)
+    assert q2.exception() is None
+    t2 = LakeTable.load(spark, table.root)
+    assert t2.last_batch_id // 1024 == 1
+    expected = state_fingerprint(replay_oracle(_oracle_events(full)))
+    assert df_fingerprint([r.asDict() for r in t2.read().collect()]) == expected
+
+
+def test_stop_before_start_is_a_plain_stop(spark, tmp_path):
+    table = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, ["repo", "path"], num_buckets=4)
+    stopped = []
+
+    class Query:
+        def stop(self):
+            stopped.append(True)
+
+    StreamingApplier(spark, table).stop(Query())
+    assert stopped == [True]

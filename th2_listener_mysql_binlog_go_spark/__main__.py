@@ -70,6 +70,26 @@ def _spark(app: str):
     )
 
 
+def _await_stream(shell, q) -> None:
+    """Wait for ``q`` to end; SIGINT or SIGTERM stops it between epochs
+    (``shell.stop``). PySpark's own SIGINT handler would cancel the
+    in-flight epoch's jobs, and a bare ``query.stop()`` interrupts it."""
+    import signal
+
+    def interrupt(signum, frame):
+        raise KeyboardInterrupt
+
+    old = {sig: signal.signal(sig, interrupt)
+           for sig in (signal.SIGINT, signal.SIGTERM)}
+    try:
+        q.awaitTermination()
+    except KeyboardInterrupt:
+        shell.stop(q)
+    finally:
+        for sig, handler in old.items():
+            signal.signal(sig, handler)
+
+
 def _parse_schema(s: str) -> list[tuple[str, str]]:
     out = []
     for part in s.split(","):
@@ -133,14 +153,15 @@ def cmd_stream(args) -> dict:
 
     spark = _spark("cdc-stream")
     table = LakeTable.load(spark, args.table)
-    q = StreamingApplier(spark, table, config=_apply_config(args),
-                         lineage_dir=args.lineage_dir).start(
+    shell = StreamingApplier(spark, table, config=_apply_config(args),
+                             lineage_dir=args.lineage_dir)
+    q = shell.start(
         args.source, args.checkpoint, args.schema,
         available_now=not args.continuous,
         max_files_per_trigger=args.max_files_per_trigger,
         resume_from_table=args.resume_from_table,
     )
-    q.awaitTermination()
+    _await_stream(shell, q)
     return {"table": args.table, "watermark_gtid": LakeTable.load(spark, args.table).watermark_gtid}
 
 
@@ -150,15 +171,16 @@ def cmd_wire_stream(args) -> dict:
 
     spark = _spark("cdc-wire-stream")
     table = LakeTable.load(spark, args.table)
-    q = StreamingWireApplier(spark, table, config=_apply_config(args),
-                             lineage_dir=args.lineage_dir).start(
+    shell = StreamingWireApplier(spark, table, config=_apply_config(args),
+                                 lineage_dir=args.lineage_dir)
+    q = shell.start(
         args.source, args.checkpoint, row_ddl=args.row_ddl,
         available_now=not args.continuous,
         max_files_per_trigger=args.max_files_per_trigger,
         resume_from_table=args.resume_from_table,
         quarantine_dir=args.quarantine_dir,
     )
-    q.awaitTermination()
+    _await_stream(shell, q)
     return {"table": args.table, "watermark_gtid": LakeTable.load(spark, args.table).watermark_gtid}
 
 
@@ -168,14 +190,15 @@ def cmd_catalog_stream(args) -> dict:
 
     spark = _spark("cdc-catalog-stream")
     cat = LakeCatalog.load(spark, args.catalog)
-    q = StreamingCatalogApplier(spark, cat, config=_apply_config(args),
-                                lineage_dir=args.lineage_dir).start(
+    shell = StreamingCatalogApplier(spark, cat, config=_apply_config(args),
+                                    lineage_dir=args.lineage_dir)
+    q = shell.start(
         args.source, args.checkpoint, args.schema,
         available_now=not args.continuous,
         max_files_per_trigger=args.max_files_per_trigger,
         resume_from_table=args.resume_from_table,
     )
-    q.awaitTermination()
+    _await_stream(shell, q)
     return {"catalog": args.catalog,
             "tables": sorted(LakeCatalog.load(spark, args.catalog).list_tables())}
 
@@ -221,15 +244,16 @@ def cmd_catalog_wire_stream(args) -> dict:
 
     spark = _spark("cdc-catalog-wire-stream")
     cat = LakeCatalog.load(spark, args.catalog)
-    q = StreamingWireCatalogApplier(spark, cat, config=_apply_config(args),
-                                    lineage_dir=args.lineage_dir).start(
+    shell = StreamingWireCatalogApplier(spark, cat, config=_apply_config(args),
+                                        lineage_dir=args.lineage_dir)
+    q = shell.start(
         args.source, args.checkpoint, row_ddl=args.row_ddl,
         available_now=not args.continuous,
         max_files_per_trigger=args.max_files_per_trigger,
         resume_from_table=args.resume_from_table,
         quarantine_dir=args.quarantine_dir,
     )
-    q.awaitTermination()
+    _await_stream(shell, q)
     return {"catalog": args.catalog,
             "tables": sorted(LakeCatalog.load(spark, args.catalog).list_tables())}
 

@@ -40,8 +40,10 @@ def build_session(
     """Build (or reuse) a SparkSession with CDC-appropriate defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
-    On a real cluster these settings travel via spark-submit --conf; the
-    builder only fills in what is unset.
+    ``getOrCreate`` sets every builder option on the ``SparkConf``, so
+    these defaults override ``spark-submit --conf`` for the same keys;
+    ``extra_conf`` is the override path (applied last, it wins over every
+    default here).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -56,6 +58,13 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Spark 4 captures the Python call site on every Column and
+        # DataFrame call (a stack walk plus py4j round trips each) for its
+        # error messages: ~0.3 s of a point lookup's plan build. Off,
+        # DataFrame errors lose their Python call site; turn it back on
+        # through ``extra_conf`` when debugging. PySpark reads the flag once
+        # per process, from the first active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Local mode hosts every executor thread inside the driver JVM, so
         # the heap must be sized for cores * per-task state + the SQL
         # cache; 8g at 32 cores spent 5-7s of GC per merge write stage and

@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import SparkSession
@@ -54,6 +55,9 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.apply import ApplyConfig, BatchApplier
 from ..plans.lake import LakeTable
 from .lineage import LineageWriter
+
+# How long a shell's stop() waits for the in-flight foreachBatch to return.
+_STOP_TIMEOUT_S = 300.0
 
 
 def _pin_handoff(checkpoint_dir: str, base: int, floor: int) -> tuple[int, int]:
@@ -269,6 +273,7 @@ class StreamingApplier:
         self.lineage = LineageWriter(lineage_dir) if lineage_dir else None
         self.views = list(views or [])
         self.view_refresh_every = max(1, view_refresh_every)
+        self._arm_stop()
         by_view_root = {os.path.realpath(v.table.root): v for v in self.views}
         for v in self.views:
             src = os.path.realpath(v.source.root)
@@ -328,9 +333,35 @@ class StreamingApplier:
 
     # ------------------------------------------------- the epoch handler
 
+    def _arm_stop(self) -> None:
+        """Reset the stop handshake: no epoch in flight, none refused."""
+        self._epoch_cv = threading.Condition()
+        self._in_epoch = self._stopping = False
+        self.refused_epoch = None
+
+    def stop(self, query: StreamingQuery) -> None:
+        """Stop ``query`` between epochs: wait up to ``_STOP_TIMEOUT_S`` for
+        the in-flight ``foreachBatch`` to return, then ``query.stop()``.
+
+        A bare ``query.stop()`` interrupts an in-flight epoch, and Spark
+        4.1's stop-time check of the resulting py4j traceback (a
+        per-character recursive regex in ``StreamExecution``) can die
+        with ``StackOverflowError``. An epoch the engine starts after the
+        wait (a file landed meanwhile) is refused: the handler raises
+        before it applies anything, so its offsets replay on the next
+        start. That ends the query with the refusal as its
+        ``exception()`` and Spark logs it as an error; ``refused_epoch``
+        then names the epoch, and a caller treats that exception as a
+        clean stop."""
+        with self._epoch_cv:
+            self._stopping = True
+            self._epoch_cv.wait_for(lambda: not self._in_epoch, _STOP_TIMEOUT_S)
+        query.stop()
+
     def _start(self, stream, checkpoint_dir: str, available_now: bool,
                resume_from_table: bool = False,
                quarantine_dir: str | None = None) -> StreamingQuery:
+        self._arm_stop()
         epoch_base, gtid_floor = (0, -1)
         if resume_from_table:
             epoch_base, gtid_floor = _pin_handoff(
@@ -343,26 +374,38 @@ class StreamingApplier:
 
         def handle(batch_df, epoch_id: int) -> None:
             epoch_id = int(epoch_id) + epoch_base
-            t0 = time.monotonic()
-            # pin the micro-batch: the apply consumes it at least twice
-            # (the DDL-candidate collect, then every segment's or pair's
-            # flatten) and for the wire shells each pass would otherwise
-            # re-run the from_json decode of the whole epoch
-            pinned = batch_df.persist()
+            with self._epoch_cv:
+                if self._stopping:
+                    self.refused_epoch = epoch_id
+                    raise RuntimeError(
+                        f"epoch {epoch_id} not applied: the shell is stopping "
+                        "(it replays on the next start)")
+                self._in_epoch = True
             try:
-                if quarantine_dir is not None:
-                    batch_df = _quarantine_split(
-                        pinned, quarantine_dir, epoch_id,
-                        _quarantine_namespace(checkpoint_dir))
-                else:
-                    batch_df = pinned
-                m = self._apply_epoch(batch_df, epoch_id)
+                t0 = time.monotonic()
+                # pin the micro-batch: the apply consumes it at least twice
+                # (the DDL-candidate collect, then every segment's or pair's
+                # flatten) and for the wire shells each pass would otherwise
+                # re-run the from_json decode of the whole epoch
+                pinned = batch_df.persist()
+                try:
+                    if quarantine_dir is not None:
+                        batch_df = _quarantine_split(
+                            pinned, quarantine_dir, epoch_id,
+                            _quarantine_namespace(checkpoint_dir))
+                    else:
+                        batch_df = pinned
+                    m = self._apply_epoch(batch_df, epoch_id)
+                finally:
+                    pinned.unpersist()
+                if self.lineage:
+                    self.lineage.write_batch(epoch_id, m, int((time.monotonic() - t0) * 1000))
+                if self.views and epoch_id % self.view_refresh_every == 0:
+                    self._refresh_views()
             finally:
-                pinned.unpersist()
-            if self.lineage:
-                self.lineage.write_batch(epoch_id, m, int((time.monotonic() - t0) * 1000))
-            if self.views and epoch_id % self.view_refresh_every == 0:
-                self._refresh_views()
+                with self._epoch_cv:
+                    self._in_epoch = False
+                    self._epoch_cv.notify_all()
 
         return _foreach_batch(stream, handle, checkpoint_dir, available_now)
 
@@ -449,6 +492,7 @@ class StreamingCatalogApplier(StreamingApplier):
         self.lineage = LineageWriter(lineage_dir) if lineage_dir else None
         self.views = list(views or [])
         self.view_refresh_every = max(1, view_refresh_every)
+        self._arm_stop()
         self._by_view_root = {
             os.path.realpath(v.table.root): v for v in self.views}
         dir_to_pair = {
