@@ -10,12 +10,15 @@ their commits stay, so crash-replay remains exactly-once.
 """
 
 import os
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
+from th2_listener_mysql_binlog_go_spark.operators import apply as apply_mod
 from th2_listener_mysql_binlog_go_spark.operators.apply import (
     BatchApplier,
+    DdlScan,
     ddl_candidates_cond,
 )
 from th2_listener_mysql_binlog_go_spark.plans.lake import LakeTable
@@ -112,14 +115,16 @@ def test_key_buckets_and_bucket_param(spark, tmp_path):
 # ---------------------------------------------------------------- empty segments
 # Segments that provably hold no observed DML commit metadata only (no
 # Spark job). The twin in each test applies the same batch through the
-# merge path — a precollected DDL list carries no DML stats, so every
-# segment runs LakeTable.merge — and the committed versions must match.
+# merge path — a DdlScan without DML stats, and no segment counts as
+# provably empty, so every segment runs LakeTable.merge — and the committed
+# versions must match.
 
 
 def _merge_path_apply(applier, batch, batch_id, **kw):
     rows = (batch.filter(ddl_candidates_cond())
             .select("gtid", "op", "ddl", "schema_name", "table_name").collect())
-    return applier.apply(batch, batch_id=batch_id, precollected_ddl=rows, **kw)
+    with mock.patch.object(apply_mod, "segment_empty", lambda low, hi, stats: False):
+        return applier.apply(batch, batch_id=batch_id, scan=DdlScan(rows, None), **kw)
 
 
 def _versions(t):

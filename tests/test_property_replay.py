@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from th2_listener_mysql_binlog_go_spark.plans.lake import LakeTable
 from th2_listener_mysql_binlog_go_spark.sources.changestream import synthetic_changestream
+from th2_listener_mysql_binlog_go_spark.streaming import runner as runner_mod
 from th2_listener_mysql_binlog_go_spark.streaming.runner import ReplayRunner
 
 from .oracle import df_fingerprint, replay_oracle, state_fingerprint
@@ -73,9 +74,9 @@ def test_random_partial_reapplication_converges(spark, tmp_path):
     assert got == expected
 
 
-def test_windowed_ddl_prescan_bounded_and_equivalent(spark, tmp_path):
+def test_windowed_ddl_prescan_bounded_and_equivalent(spark, tmp_path, monkeypatch):
     """Driver-bounded prescan (round-2 review #4): a dense-DDL replay with
-    prescan_window=2 must (a) never hold more than the window's worth of
+    PRESCAN_WINDOW=2 must (a) never hold more than the window's worth of
     DDL rows in one collect and (b) converge to the same state as an
     effectively-unwindowed run — across both sequential and pipelined
     modes."""
@@ -92,8 +93,8 @@ def test_windowed_ddl_prescan_bounded_and_equivalent(spark, tmp_path):
                               ("commit", "string"), ("lang", "string"),
                               ("content", "string")],
                              ["repo", "path"], num_buckets=4)
-        runner = ReplayRunner(spark, t, batch_span=250,
-                              pipeline_depth=depth, prescan_window=window)
+        monkeypatch.setattr(runner_mod, "PRESCAN_WINDOW", window)
+        runner = ReplayRunner(spark, t, batch_span=250, pipeline_depth=depth)
         runner.run(stream)
         fps[name] = df_fingerprint([r.asDict() for r in t.read().collect()])
         if name == "wide":

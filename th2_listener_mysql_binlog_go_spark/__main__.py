@@ -139,7 +139,6 @@ def cmd_replay(args) -> dict:
     runner = ReplayRunner(
         spark, table, batch_span=args.batch_span, config=_apply_config(args),
         lineage_dir=args.lineage_dir, pipeline_depth=args.pipeline_depth,
-        prescan_window=args.prescan_window,
         partition_col=args.partition_col, partition_span=args.partition_span,
         archive_root=args.source if args.partition_col else None,
     )
@@ -268,7 +267,6 @@ def cmd_catalog_replay(args) -> dict:
     runner = CatalogReplayRunner(
         spark, cat, batch_span=args.batch_span, config=_apply_config(args),
         lineage_dir=args.lineage_dir, pipeline_depth=args.pipeline_depth,
-        prescan_window=args.prescan_window,
         partition_col=args.partition_col, partition_span=args.partition_span,
         archive_root=args.source if args.partition_col else None,
     )
@@ -621,7 +619,6 @@ def main(argv: list[str] | None = None) -> int:
         sp.add_argument("--source", required=True)
         sp.add_argument("--batch-span", type=int, default=1_000_000)
         sp.add_argument("--pipeline-depth", type=int, default=3)
-        sp.add_argument("--prescan-window", type=int, default=256)
         sp.add_argument("--partition-col", default=None,
                         help="hive partition column of a gtid-range-"
                              "partitioned source archive (e.g. gtid_span); "

@@ -14,9 +14,10 @@ table "needed by our engine"): per micro-batch —
    each DML segment merges under the schema in force at its position,
    then the DDL applies as a metadata commit before the next segment.
    TRUNCATE is a GTID marker committed atomically with the batch's final
-   segment commit. The DDL collect job also observes the count and gtid
-   range of the batch's observed DML, which tells which segments are
-   provably empty.
+   segment commit. The DDL scan (:func:`scan_ddl`, the one every apply
+   path uses) also observes a batch's count and gtid range of observed
+   DML; with the segment bounds, :func:`segment_empty` tells which
+   segments are provably empty.
 4. **commit** per segment, under its own sub-id: a segment holding DML
    merges via :meth:`LakeTable.merge` — merge-on-read delta append by
    default (O(batch)), copy-on-write optional; idempotent (see
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.ddl import classify_ddl, ddl_matches_any, parse_alter, parse_create
-from ..plans.lake import GTID_COL, OP_COL, SEQ_COL, LakeTable
+from ..plans.lake import GTID_COL, OP_COL, SEQ_COL, LakeTable, altered_columns
 
 DML_OPS = ("INSERT", "UPDATE", "DELETE")
 DDL_OPS = ("TRUNCATE", "CREATE_TABLE", "DROP_TABLE", "ALTER_TABLE")
@@ -63,10 +64,40 @@ def ddl_candidates_cond():
     )
 
 
+def observed_dml_cond(pairs: list[tuple[str, str]]):
+    """The rows :meth:`BatchApplier.flatten_dml` keeps: DML of one of the
+    observed (schema, table) ``pairs``. Also the predicate of the DDL
+    scan's DML observation, so the empty-segment test and the merge input
+    cannot drift."""
+    pair_col = F.struct(F.col("schema_name"), F.col("table_name"))
+    observed = F.array(
+        *[
+            F.struct(F.lit(s).alias("schema_name"), F.lit(t).alias("table_name"))
+            for s, t in pairs
+        ]
+    )
+    return F.col("op").isin(*DML_OPS) & F.array_contains(observed, pair_col)
+
+
+def ddl_scan_exprs(pairs: list[tuple[str, str]] | None) -> tuple:
+    """The DDL scan's filter and its observed-DML aggregates over ``pairs``
+    (None: no aggregates, the scan observes nothing and its stats are
+    None). Build once per applier: each PySpark Column call is a JVM round
+    trip, a fixed cost every batch would otherwise pay."""
+    if pairs is None:
+        return ddl_candidates_cond(), []
+    dml = observed_dml_cond(pairs)
+    return ddl_candidates_cond(), [
+        F.count(F.when(dml, 1)).alias("n"),
+        F.min(F.when(dml, F.col("gtid"))).alias("lo"),
+        F.max(F.when(dml, F.col("gtid"))).alias("hi"),
+    ]
+
+
 @dataclass(frozen=True)
 class DmlStats:
-    """Count and gtid range of a batch's observed DML rows, observed by the
-    DDL collect job (no job of its own)."""
+    """Count and gtid range of observed DML rows, observed by the DDL scan
+    job (no job of its own)."""
 
     count: int
     min_gtid: int | None
@@ -74,17 +105,60 @@ class DmlStats:
 
     def empty_between(self, low: int | None, hi: int | None) -> bool:
         """True iff no observed DML row has ``low < gtid < hi`` (None =
-        unbounded): none at all, none above ``low`` or below ``hi``, or no
-        integer gtid fits between the bounds (back-to-back DDLs, or a
-        segment wholly at or below a TRUNCATE floor). Rows with a NULL gtid
-        fail any bound, as they fail the segment filters."""
+        unbounded): none at all, or none above ``low`` or below ``hi``.
+        Rows with a NULL gtid fail any bound, as they fail the segment
+        filters."""
         if self.count == 0:
-            return True
-        if low is not None and hi is not None and hi <= low + 1:
             return True
         if low is not None and (self.max_gtid is None or self.max_gtid <= low):
             return True
         return hi is not None and (self.min_gtid is None or self.min_gtid >= hi)
+
+
+def segment_empty(low: int | None, hi: int | None, stats: DmlStats | None) -> bool:
+    """True iff the segment ``low < gtid < hi`` provably holds no observed
+    DML: no integer gtid fits between its bounds (back-to-back DDLs, or a
+    segment wholly at or below a TRUNCATE floor), which needs no stats, or
+    ``stats`` prove it."""
+    if low is not None and hi is not None and hi <= low + 1:
+        return True
+    return stats is not None and stats.empty_between(low, hi)
+
+
+@dataclass(frozen=True)
+class DdlScan:
+    """What an apply needs to know before it segments a batch: the DDL
+    candidate rows in gtid order (unclassified, or already classified for
+    this pair), and the observed-DML stats. ``stats`` may cover a superset
+    of the rows the segments filter (a whole catalog batch) — a segment
+    they prove empty is then empty all the more — but never less. None
+    means unknown (a runner window, which observes nothing): only the
+    segments :func:`segment_empty` proves without stats skip their merge."""
+
+    rows: list
+    stats: DmlStats | None
+
+
+def scan_ddl(df: DataFrame, exprs: tuple) -> DdlScan:
+    """The one DDL scan of every apply path: one collect of ``df``'s DDL
+    candidate rows (tiny by construction), whose job also observes the
+    count and gtid range of its observed DML — same scan, no extra job or
+    stage. ``exprs`` comes from :func:`ddl_scan_exprs`; the Observation
+    sits above the filter, so it sees every row of ``df``. Without
+    aggregates it observes nothing and the stats are None."""
+    ddl_cond, stat_exprs = exprs
+    obs = Observation(f"ddl-scan-{uuid.uuid4().hex[:8]}") if stat_exprs else None
+    if obs is not None:
+        df = df.observe(obs, *stat_exprs)
+    rows = (
+        df.filter(ddl_cond)
+        .select("gtid", "op", "ddl", "schema_name", "table_name")
+        .collect()
+    )
+    m = LakeTable._obs_get_safe(obs) if obs is not None else {}
+    stats = (DmlStats(int(m["n"]), m["lo"], m["hi"])
+             if m.get("n") is not None else None)
+    return DdlScan(sorted(rows, key=lambda r: r["gtid"]), stats)
 
 
 @dataclass
@@ -195,19 +269,6 @@ class BatchApplier:
 
     # ------------------------------------------------------------ projection
 
-    def _observed_dml_cond(self):
-        """The rows :meth:`flatten_dml` keeps: DML of an observed (schema,
-        table) pair. Also the predicate of the DDL scan's DML observation,
-        so the empty-segment test and the merge input cannot drift."""
-        pair_col = F.struct(F.col("schema_name"), F.col("table_name"))
-        observed = F.array(
-            *[
-                F.struct(F.lit(s).alias("schema_name"), F.lit(t).alias("table_name"))
-                for s, t in self.config.observed_pairs()
-            ]
-        )
-        return F.col("op").isin(*DML_OPS) & F.array_contains(observed, pair_col)
-
     def flatten_dml(self, batch: DataFrame) -> DataFrame:
         """Change events (nested before/after) -> flat keyed change rows.
 
@@ -215,7 +276,7 @@ class BatchApplier:
         whole-stage codegen, no shuffle, no Python. Every kept event yields
         at least one change row.
         """
-        dml = batch.filter(self._observed_dml_cond())
+        dml = batch.filter(observed_dml_cond(self.config.observed_pairs()))
         keys = self.table.snapshot.key_names
         key_changed = None
         for k in keys:
@@ -260,52 +321,22 @@ class BatchApplier:
 
     # ------------------------------------------------------------ DDL
 
-    def _collect_ddl(self, batch: DataFrame, precollected: list | None = None
-                     ) -> tuple[list[dict], DmlStats | None]:
-        """Collect + classify this batch's DDL rows (tiny by construction).
-
-        The collect job carries an Observation of the batch's observed DML
-        (count, min/max gtid) — same scan, no extra job or stage — returned
-        as the second element. ``precollected`` lets the runner scan the
-        stream for DDL once and hand each batch its slice, saving one Spark
-        job per batch; such callers get no stats (None)."""
-        if precollected is not None:
-            return self._classify_ddl(precollected), None
-        ddl_cond, stat_exprs = self._ddl_scan_exprs
-        obs = Observation(f"ddl-scan-{uuid.uuid4().hex[:8]}")
-        rows = (
-            batch.observe(obs, *stat_exprs)
-            .filter(ddl_cond)
-            .select("gtid", "op", "ddl", "schema_name", "table_name")
-            .collect()
-        )
-        m = LakeTable._obs_get_safe(obs)
-        stats = (DmlStats(int(m["n"]), m["lo"], m["hi"])
-                 if m.get("n") is not None else None)
-        return self._classify_ddl(rows), stats
-
     @cached_property
-    def _ddl_scan_exprs(self) -> tuple:
-        """The DDL scan's filter and observed-DML aggregates, built once per
-        applier: each PySpark Column call is a JVM round trip with
-        call-site capture (milliseconds apiece), a fixed cost every batch
-        would otherwise pay."""
-        dml = self._observed_dml_cond()
-        return ddl_candidates_cond(), [
-            F.count(F.when(dml, 1)).alias("n"),
-            F.min(F.when(dml, F.col("gtid"))).alias("lo"),
-            F.max(F.when(dml, F.col("gtid"))).alias("hi"),
-        ]
+    def scan_exprs(self) -> tuple:
+        """:func:`ddl_scan_exprs` of this applier's pairs, built once."""
+        return ddl_scan_exprs(self.config.observed_pairs())
 
     def _classify_ddl(self, rows: list) -> list[dict]:
         """Classify DDL candidate rows, keeping this applier's observed pairs.
 
         Accepts pre-classified ops (TRUNCATE/ALTER_TABLE/...) or raw
         op='QUERY' rows classified here via the pattern.go regex families;
-        non-matching statements are dropped (listener.go:254-256)."""
+        non-matching statements are dropped (listener.go:254-256). Rows
+        keep their (gtid) order; classifying classified rows again is a
+        no-op."""
         out = []
         observed = set(self.config.observed_pairs())
-        for r in sorted(rows, key=lambda r: r["gtid"]):
+        for r in rows:
             op, schema, table = r["op"], r["schema_name"], r["table_name"]
             if op == "QUERY" or r["ddl"]:
                 # The event's session schema (binlog QueryEvent.Schema) with
@@ -341,24 +372,14 @@ class BatchApplier:
         if d["op"] == "ALTER_TABLE":
             if t is None:
                 return False  # table dropped / not created yet
-            cmd = parse_alter(d["ddl"] or "")
             # the commit records its gtid (monotonic): what a within-batch
             # resume reads to skip the schema DDLs already applied
             props = {SCHEMA_DDL_GTID: str(max(d["gtid"], _schema_ddl_gtid(t)))}
             try:
-                if cmd.kind == "add":
-                    t.add_column(cmd.column, cmd.type_ or "string", props)
-                elif cmd.kind == "rename":
-                    t.rename_column(cmd.column, cmd.new_name, props)
-                elif cmd.kind == "modify":
-                    t.widen_column(cmd.column, cmd.type_ or "string", props)
-                elif cmd.kind == "drop":
-                    t.drop_column(cmd.column, props)
-                else:
-                    return False
-                return True
+                t.alter(parse_alter(d["ddl"] or ""), props)
             except ValueError:
-                return False  # non-widening / unknown column: skip, don't fail the stream
+                return False  # refused (see altered_columns): skip, don't fail the stream
+            return True
         if self.catalog is not None and self.pair is not None:
             schema, table = self.pair
             if d["op"] == "CREATE_TABLE":
@@ -387,7 +408,7 @@ class BatchApplier:
         batches' stage jobs (distinct commit dirs, table never read) —
         the replay runner pipelines these and serializes only
         :meth:`commit_batch`. Callers must ensure the batch carries no
-        DDL for observed tables (the runner's prescan knows)."""
+        DDL for observed tables (the runner's window scan knows)."""
         return self.table.stage_mor_delta(
             self.flatten_dml(batch),
             files_per_bucket=self.config.files_per_bucket,
@@ -422,7 +443,7 @@ class BatchApplier:
 
     def apply(self, batch: DataFrame, batch_id: int,
               final_extra_props: dict[str, str] | None = None,
-              precollected_ddl: list | None = None,
+              scan: DdlScan | None = None,
               resume_within_batch: bool = False,
               extra_props: dict[str, str] | None = None) -> dict:
         """Apply one micro-batch. Returns lineage metrics.
@@ -440,8 +461,14 @@ class BatchApplier:
         ``replay_batch_span`` guard — a crash between segments of a
         fresh table's first DDL-segmented batch must not leave applied
         sub-batches with no recorded span).
+
+        ``scan``: the batch's :class:`DdlScan` when the caller already ran
+        :func:`scan_ddl` over it or over a superset (a catalog batch, a
+        runner window); else this runs it, one Spark job.
         """
-        ddls, dml_stats = self._collect_ddl(batch, precollected=precollected_ddl)
+        if scan is None:
+            scan = scan_ddl(batch, self.scan_exprs)
+        ddls, dml_stats = self._classify_ddl(scan.rows), scan.stats
 
         # Within-batch resume (this batch was partially applied before — a
         # crash, or an append-only source that has since grown): everything
@@ -556,7 +583,7 @@ class BatchApplier:
                 # carries the crash-durable extra_props
                 props = final_props if i == len(plan) - 1 else (seg_props or None)
                 low = max((g for g in (lo_g, gtid_floor) if g is not None), default=None)
-                if dml_stats is not None and dml_stats.empty_between(low, hi_g):
+                if segment_empty(low, hi_g, dml_stats):
                     # Provably no DML in this segment: commit metadata only
                     # (no Spark job). The commit itself must stay — its
                     # last_batch_id is what lets a crash-replay skip the
@@ -600,63 +627,27 @@ class BatchApplier:
         )
 
     def _simulate_schema_changes(self, schema_ddls: list[dict]) -> list[bool]:
-        """Per DDL: would applying it CHANGE the table's column set?
+        """Per DDL: would applying it CHANGE the table's (name, type) list?
 
-        Walks the DDL sequence against a driver-side copy of the current
-        column specs, mirroring _apply_ddl/LakeTable exactly: ADD changes
-        iff the name is absent; RENAME iff old exists, differs from new,
-        and new is absent; MODIFY iff the type differs and the widening
-        is in lake._WIDEN_OK; DROP iff the column exists and is not a
-        key. Anything else that _apply_ddl would skip (parse failure,
-        unknown kind) is non-changing. CREATE/DROP TABLE and any state
-        the simulation cannot track (no table, post-CREATE rebind) make
-        that DDL — and, conservatively, every later one — changing."""
-        from ..plans.lake import _WIDEN_OK
-
-        if not schema_ddls:
-            return []
-        out: list[bool] = []
+        Folds :func:`~..plans.lake.altered_columns` — the rule
+        :meth:`LakeTable.alter` commits — over a driver-side copy of the
+        current columns: a DDL changes iff the rule accepts it and the list
+        differs (rename-to-self, same-type MODIFY and every refused DDL do
+        not). CREATE/DROP TABLE rebind the table and no table means unknown
+        state: that DDL and, conservatively, every later one change."""
         if self.table is None:
             return [True] * len(schema_ddls)
-        cols = {c.name: c.type for c in self.table.snapshot.columns}
-        keys = set(self.table.snapshot.key_names)
-        known = True
+        cols, key_ids = self.table.snapshot.columns, self.table.snapshot.key_ids
+        out: list[bool] = []
         for d in schema_ddls:
-            if not known or d["op"] != "ALTER_TABLE":
-                out.append(True)
-                known = False  # CREATE/DROP rebinds the table: stop simulating
+            if d["op"] != "ALTER_TABLE":
+                return out + [True] * (len(schema_ddls) - len(out))
+            try:
+                new = altered_columns(cols, key_ids, parse_alter(d["ddl"] or ""),
+                                      1 + max(c.id for c in cols))
+            except ValueError:
+                out.append(False)
                 continue
-            cmd = parse_alter(d["ddl"] or "")
-            if cmd.kind == "add":
-                if cmd.column not in cols:
-                    cols[cmd.column] = cmd.type_ or "string"
-                    out.append(True)
-                else:
-                    out.append(False)
-            elif cmd.kind == "rename":
-                if (cmd.column in cols and cmd.new_name != cmd.column
-                        and cmd.new_name not in cols):
-                    cols[cmd.new_name] = cols.pop(cmd.column)
-                    if cmd.column in keys:
-                        keys.discard(cmd.column)
-                        keys.add(cmd.new_name)
-                    out.append(True)
-                else:
-                    out.append(False)
-            elif cmd.kind == "modify":
-                cur = cols.get(cmd.column)
-                new = cmd.type_ or "string"
-                if cur is not None and cur != new and (cur, new) in _WIDEN_OK:
-                    cols[cmd.column] = new
-                    out.append(True)
-                else:
-                    out.append(False)
-            elif cmd.kind == "drop":
-                if cmd.column in cols and cmd.column not in keys:
-                    del cols[cmd.column]
-                    out.append(True)
-                else:
-                    out.append(False)
-            else:
-                out.append(False)  # _apply_ddl would skip it too
+            out.append([(c.name, c.type) for c in new] != [(c.name, c.type) for c in cols])
+            cols = new
         return out

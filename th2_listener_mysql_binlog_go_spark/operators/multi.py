@@ -10,9 +10,11 @@ per-pair :class:`~.apply.BatchApplier`\\ s over a
 defs parsed from the statement) and DROP TABLE as catalog commits in GTID
 order relative to the pair's DML.
 
-Scale shape: the batch's DDL rows are collected ONCE (tiny by
-construction); each pair's DML slice is a Catalyst filter over the shared
-batch scan — per-pair work is an independent Spark job exactly as the
+Scale shape: the batch's DDL rows are collected ONCE by
+:func:`~.apply.scan_ddl` (tiny by construction), whose job also observes
+the DML of every observed pair, so each pair's provably empty segments
+commit without a job; each pair's DML slice is a Catalyst filter over the
+shared batch scan — per-pair work is an independent Spark job exactly as the
 single-table path, so K observed tables cost K merge jobs, not K stream
 rescans of unrelated data (the (schema_name, table_name) filter prunes at
 the source). Because those K jobs touch disjoint tables, their expensive
@@ -29,11 +31,12 @@ catalog properties.
 from __future__ import annotations
 
 from dataclasses import replace
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 
 from ..plans.catalog import LakeCatalog
-from .apply import ApplyConfig, BatchApplier, ddl_candidates_cond
+from .apply import ApplyConfig, BatchApplier, DdlScan, ddl_scan_exprs, scan_ddl
 
 
 class MultiTableApplier:
@@ -50,17 +53,12 @@ class MultiTableApplier:
             catalog=self.catalog, pair=(schema, table),
         )
 
-    def collect_ddl(self, batch: DataFrame, precollected: list | None = None) -> list:
-        """One driver-side collect of the batch's DDL candidates, shared by
-        every pair (each pair then classifies/filters its own slice —
-        idempotent, and the rows are tiny by construction)."""
-        if precollected is not None:
-            return precollected
-        return (
-            batch.filter(ddl_candidates_cond())
-            .select("gtid", "op", "ddl", "schema_name", "table_name")
-            .collect()
-        )
+    @cached_property
+    def scan_exprs(self) -> tuple:
+        """:func:`~.apply.ddl_scan_exprs` over every observed pair, built
+        once: the scan's DML stats cover a superset of any one pair's rows,
+        so a segment they prove empty is empty for that pair."""
+        return ddl_scan_exprs(self.config.observed_pairs())
 
     def stage_pairs(self, batch: DataFrame, pairs: list[tuple[str, str]]) -> dict:
         """Stage (delta-write, NO commit) ``pairs``' slices of a DDL-free
@@ -112,20 +110,24 @@ class MultiTableApplier:
     # ------------------------------------------------------------ main
 
     def apply(self, batch: DataFrame, batch_id: int,
-              precollected_ddl: list | None = None,
+              scan: DdlScan | None = None,
               resume_within_batch: bool = False) -> dict:
         """Apply one micro-batch to every observed pair. Returns aggregate
         metrics plus a per-pair breakdown under ``"tables"``.
 
-        DDL-free pairs of a mor batch stage their delta writes in parallel
-        and commit in order; pairs with DDL this batch — or any pair during
-        a within-batch resume — run the sequential segment path."""
-        rows = self.collect_ddl(batch, precollected_ddl)
+        ``scan``: the batch's :class:`~.apply.DdlScan` (or a superset's,
+        possibly without stats) when the caller already ran it; else one
+        scan here serves every pair. DDL-free pairs of a mor batch stage
+        their delta writes in parallel and commit in order; pairs with DDL
+        this batch — or any pair during a within-batch resume — run the
+        sequential segment path."""
+        if scan is None:
+            scan = scan_ddl(batch, self.scan_exprs)
         pairs = self.config.observed_pairs()
         total = self._zero_metrics(batch_id)
 
         appliers = {p: self._applier(*p) for p in pairs}
-        ddl_by_pair = {p: appliers[p]._classify_ddl(rows) for p in pairs}
+        ddl_by_pair = {p: appliers[p]._classify_ddl(scan.rows) for p in pairs}
         can_parallel = (
             self.config.merge_mode == "mor"
             and not resume_within_batch
@@ -148,7 +150,7 @@ class MultiTableApplier:
         for schema, table in slow:
             m = appliers[(schema, table)].apply(
                 batch, batch_id,
-                precollected_ddl=ddl_by_pair[(schema, table)],
+                scan=DdlScan(ddl_by_pair[(schema, table)], scan.stats),
                 resume_within_batch=resume_within_batch,
             )
             self._fold(total, f"{schema}.{table}", m)

@@ -57,11 +57,13 @@ import shutil
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.ddl import AlterCommand
 
 GTID_COL = "_gtid"
 # Within-gtid tiebreaker: real binlogs put several row changes to one key in
@@ -318,6 +320,40 @@ def _struct_of(columns: list[ColumnSpec], with_op: bool = False) -> T.StructType
     if with_op:
         fields.append(T.StructField(OP_COL, T.StringType(), False))
     return T.StructType(fields)
+
+
+def altered_columns(columns: list[ColumnSpec], key_ids: list[int],
+                    cmd: AlterCommand, new_id: int) -> list[ColumnSpec]:
+    """The column list after ALTER ``cmd``; ``new_id`` is the id an ADD
+    gives its column. The one rule both :meth:`LakeTable.alter` and the
+    applier's segmentation simulation follow. Raises ValueError where the
+    table refuses the statement: ADD of an existing name; RENAME, MODIFY or
+    DROP of an absent column; RENAME onto another existing name; a MODIFY
+    that does not widen (``_WIDEN_OK``); DROP of a key column; any other
+    kind. Rename-to-self and a same-type MODIFY are accepted unchanged."""
+    col = next((c for c in columns if c.name == cmd.column), None)
+    if cmd.kind == "add":
+        if col is not None:
+            raise ValueError(f"column {cmd.column} exists")
+        return columns + [ColumnSpec(new_id, cmd.column, cmd.type_ or "string")]
+    if cmd.kind not in ("rename", "modify", "drop"):
+        raise ValueError(f"unsupported ALTER kind {cmd.kind!r}")
+    if col is None:
+        raise ValueError(f"no column {cmd.column}")
+    if cmd.kind == "drop":
+        if col.id in key_ids:
+            raise ValueError("cannot drop a key column")
+        return [c for c in columns if c is not col]
+    if cmd.kind == "rename":
+        if cmd.new_name != col.name and any(c.name == cmd.new_name for c in columns):
+            raise ValueError(f"column {cmd.new_name} already exists")
+        new = replace(col, name=cmd.new_name)
+    else:
+        new_type = cmd.type_ or "string"
+        if col.type != new_type and (col.type, new_type) not in _WIDEN_OK:
+            raise ValueError(f"narrowing/unsupported: {col.type} -> {new_type}")
+        new = replace(col, type=new_type)
+    return [new if c is col else c for c in columns]
 
 
 @functools.lru_cache(maxsize=1024)
@@ -1763,6 +1799,38 @@ class LakeTable:
 
     # ---------------------------------------------------------------- merge
 
+    def _projected_changes(self, changes: DataFrame) -> DataFrame:
+        """A merge's input on the current columns, leniently: each cast to
+        its current type, columns the batch does not carry (events decoded
+        before an ADD COLUMN landed) as NULL, ``_seq`` 0 when absent, plus
+        the bucket column."""
+        avail = set(changes.columns)
+        proj = [
+            F.col(c.name).cast(c.type).alias(c.name) if c.name in avail
+            else F.lit(None).cast(c.type).alias(c.name)
+            for c in self.snapshot.columns
+        ]
+        seq = F.col(SEQ_COL).cast("bigint") if SEQ_COL in avail else F.lit(0).cast("bigint")
+        return changes.select(*proj, OP_COL, GTID_COL, seq.alias(SEQ_COL)).withColumn(
+            BUCKET_COL, self.bucket_expr()
+        )
+
+    def _progress_properties(self, batch_max: int | None, batch_id: int,
+                             extra_properties: dict[str, str] | None) -> dict:
+        """The exactly-once properties a merge commit carries: the watermark
+        raised to the batch's max gtid, ``last_batch_id``, and
+        ``extra_properties`` with ``truncate_gtid`` merged monotonically
+        (a replay can never regress it)."""
+        props = dict(self.snapshot.properties)
+        props["watermark_gtid"] = str(max(self.watermark_gtid,
+                                          -1 if batch_max is None else batch_max))
+        props["last_batch_id"] = str(batch_id)
+        extra = dict(extra_properties or {})
+        if "truncate_gtid" in extra:
+            extra["truncate_gtid"] = str(max(self.truncate_gtid, int(extra["truncate_gtid"])))
+        props.update(extra)
+        return props
+
     def stage_mor_delta(
         self,
         changes: DataFrame,
@@ -1785,16 +1853,7 @@ class LakeTable:
         t_start = _time.monotonic()
         snap = self.snapshot
         keys = snap.key_names
-        avail = set(changes.columns)
-        proj = [
-            F.col(c.name).cast(c.type).alias(c.name) if c.name in avail
-            else F.lit(None).cast(c.type).alias(c.name)
-            for c in snap.columns
-        ]
-        seq = F.col(SEQ_COL).cast("bigint") if SEQ_COL in avail else F.lit(0).cast("bigint")
-        changes = changes.select(*proj, OP_COL, GTID_COL, seq.alias(SEQ_COL)).withColumn(
-            BUCKET_COL, self.bucket_expr()
-        )
+        changes = self._projected_changes(changes)
         obs = Observation(f"stage-{label}-{uuid.uuid4().hex[:6]}")
         # Append the batch as per-bucket deltas. LWW resolution happens at
         # read/compaction time anyway (keyed on _gtid), so the write needs
@@ -1878,14 +1937,7 @@ class LakeTable:
         per_bucket = staged.get("bucket_counts")
         if per_bucket is None:  # > _OBS_BUCKET_LIMIT buckets: footer fallback
             per_bucket = self._footer_rows(self.root, written)
-        props = dict(snap.properties)
-        batch_max = staged["max_gtid"] if staged["max_gtid"] is not None else self.watermark_gtid
-        props["watermark_gtid"] = str(max(self.watermark_gtid, batch_max))
-        props["last_batch_id"] = str(batch_id)
-        extra = dict(extra_properties or {})
-        if "truncate_gtid" in extra:
-            extra["truncate_gtid"] = str(max(self.truncate_gtid, int(extra["truncate_gtid"])))
-        props.update(extra)
+        props = self._progress_properties(staged["max_gtid"], batch_id, extra_properties)
         new_version = snap.version + 1
         self._write_snapshot(Snapshot(
             version=new_version, columns=snap.columns, key_ids=snap.key_ids,
@@ -1967,19 +2019,7 @@ class LakeTable:
         if mode != "cow":
             raise ValueError(f"unknown merge mode {mode!r}")
         keys = snap.key_names
-
-        # Lenient projection: logical columns the batch doesn't carry
-        # (events decoded before an ADD COLUMN landed) materialize as NULL.
-        avail = set(changes.columns)
-        proj = [
-            F.col(c.name).cast(c.type).alias(c.name) if c.name in avail
-            else F.lit(None).cast(c.type).alias(c.name)
-            for c in snap.columns
-        ]
-        seq = F.col(SEQ_COL).cast("bigint") if SEQ_COL in avail else F.lit(0).cast("bigint")
-        changes = changes.select(*proj, OP_COL, GTID_COL, seq.alias(SEQ_COL)).withColumn(
-            BUCKET_COL, self.bucket_expr()
-        )
+        changes = self._projected_changes(changes)
 
         new_version = snap.version + 1
         obs = Observation(f"merge-{batch_id}")
@@ -2039,16 +2079,7 @@ class LakeTable:
         if per_bucket is None:  # > _OBS_BUCKET_LIMIT buckets: footer fallback
             per_bucket = self._footer_rows(self.root, written)
         t_footer_done = _time.monotonic()
-        props = dict(snap.properties)
-        batch_max = m.get("max_gtid")
-        if batch_max is None:
-            batch_max = self.watermark_gtid
-        props["watermark_gtid"] = str(max(self.watermark_gtid, batch_max))
-        props["last_batch_id"] = str(batch_id)
-        extra = dict(extra_properties or {})
-        if "truncate_gtid" in extra:  # monotonic merge: replays can't regress it
-            extra["truncate_gtid"] = str(max(self.truncate_gtid, int(extra["truncate_gtid"])))
-        props.update(extra)
+        props = self._progress_properties(m.get("max_gtid"), batch_id, extra_properties)
 
         self._write_snapshot(Snapshot(
             version=new_version, columns=snap.columns, key_ids=snap.key_ids,
@@ -2240,58 +2271,36 @@ class LakeTable:
             files=snap.files if files is None else files, properties=props, parent=snap.version,
         ))
 
+    def alter(self, cmd: AlterCommand, extra_properties: dict[str, str] | None = None) -> None:
+        """ALTER TABLE ``cmd`` (ADD/RENAME/MODIFY-widen/DROP COLUMN) as one
+        metadata commit of :func:`altered_columns`' result; old files are
+        re-mapped by column id on read (absent columns read as NULL).
+
+        A new column's id is one past every id the table ever used: a
+        dropped column's id stays in the ``epoch_schemas`` of the files
+        written with it (they only grow), and reusing it would bring those
+        files' values back under the new column."""
+        snap = self.snapshot
+        new_id = 1 + max(c.id for cols in [snap.columns, *snap.epoch_schemas.values()]
+                         for c in cols)
+        self._commit_meta(altered_columns(snap.columns, snap.key_ids, cmd, new_id),
+                          extra_properties=extra_properties)
+
     def add_column(self, name: str, type_: str,
                    extra_properties: dict[str, str] | None = None) -> None:
-        """ALTER TABLE ADD COLUMN — metadata only; old files read as NULL.
-
-        The new id is one past every id the table ever used: a dropped
-        column's id stays in the ``epoch_schemas`` of the files written
-        with it (they only grow), and reusing it would bring those files'
-        values back under the new column."""
-        snap = self.snapshot
-        if any(c.name == name for c in snap.columns):
-            raise ValueError(f"column {name} exists")
-        next_id = 1 + max(c.id for cols in [snap.columns, *snap.epoch_schemas.values()]
-                          for c in cols)
-        self._commit_meta(snap.columns + [ColumnSpec(next_id, name, type_)],
-                          extra_properties=extra_properties)
+        self.alter(AlterCommand("add", column=name, type_=type_), extra_properties)
 
     def rename_column(self, old: str, new: str,
                       extra_properties: dict[str, str] | None = None) -> None:
-        """ALTER TABLE RENAME COLUMN — id-stable, metadata only."""
-        if not any(c.name == old for c in self.snapshot.columns):
-            raise ValueError(f"no column {old}")
-        if old != new and any(c.name == new for c in self.snapshot.columns):
-            raise ValueError(f"column {new} already exists")
-        cols = [ColumnSpec(c.id, new if c.name == old else c.name, c.type, c.nullable)
-                for c in self.snapshot.columns]
-        self._commit_meta(cols, extra_properties=extra_properties)
+        self.alter(AlterCommand("rename", column=old, new_name=new), extra_properties)
 
     def widen_column(self, name: str, new_type: str,
                      extra_properties: dict[str, str] | None = None) -> None:
-        """ALTER TABLE ALTER COLUMN TYPE — widening only, metadata only."""
-        cols = []
-        found = False
-        for c in self.snapshot.columns:
-            if c.name == name:
-                found = True
-                if c.type != new_type and (c.type, new_type) not in _WIDEN_OK:
-                    raise ValueError(f"narrowing/unsupported: {c.type} -> {new_type}")
-                cols.append(ColumnSpec(c.id, c.name, new_type, c.nullable))
-            else:
-                cols.append(c)
-        if not found:
-            raise ValueError(f"no column {name}")
-        self._commit_meta(cols, extra_properties=extra_properties)
+        self.alter(AlterCommand("modify", column=name, type_=new_type), extra_properties)
 
     def drop_column(self, name: str,
                     extra_properties: dict[str, str] | None = None) -> None:
-        if name in self.snapshot.key_names:
-            raise ValueError("cannot drop a key column")
-        cols = [c for c in self.snapshot.columns if c.name != name]
-        if len(cols) == len(self.snapshot.columns):
-            raise ValueError(f"no column {name}")
-        self._commit_meta(cols, extra_properties=extra_properties)
+        self.alter(AlterCommand("drop", column=name), extra_properties)
 
     def truncate(self, extra_properties: dict[str, str] | None = None) -> None:
         """TRUNCATE TABLE (reference op: component/bean/query.go:24) — drop all file refs."""

@@ -23,7 +23,7 @@ The Spark analogue of the reference's sync loop + resume logic
 One run loop serves both targets: :class:`ReplayRunner` (one LakeTable)
 and :class:`CatalogReplayRunner` (a LakeCatalog) share the bounds check,
 clamp/gap check, recorded-span guard, ``k0``/``k1`` planning, windowed DDL
-prescan, sequential and pipelined stage/commit paths, totals and lineage.
+scan, sequential and pipelined stage/commit paths, totals and lineage.
 The catalog runner overrides only the hooks that really differ: where
 progress lives (the table's own commits vs the catalog PROGRESS file),
 the watermark, the apply/stage/commit calls, and the resume condition
@@ -42,40 +42,14 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.apply import ApplyConfig, BatchApplier
+from ..operators.apply import ApplyConfig, BatchApplier, DdlScan, ddl_scan_exprs, scan_ddl
 from ..plans.lake import LakeTable
 from .lineage import LineageWriter
 
 
-def _ddl_windows(runner, stream: DataFrame, ks: list[int], span: int):
-    """Yield ``(window_ks, {k: ddl_rows})`` with one driver collect per
-    ``runner.prescan_window`` batches. DDL is ~1e-4 of a change stream and
-    the candidate condition is a JVM-side regex prefilter, so each collect
-    is tiny; windowing bounds driver memory at O(window) for unbounded
-    runs (round-2 review item #4). ``runner.max_prescan_rows`` records the
-    largest single collect for boundedness assertions."""
-    from ..operators.apply import ddl_candidates_cond
-
-    w = runner.prescan_window
-    for i in range(0, len(ks), w):
-        wks = ks[i:i + w]
-        lo_g, hi_g = wks[0] * span, (wks[-1] + 1) * span
-        cond = (ddl_candidates_cond()
-                & (F.col("gtid") >= lo_g) & (F.col("gtid") < hi_g))
-        cond = cond & runner._partition_pred(lo_g, hi_g)
-        rows = sorted(
-            (
-                stream.filter(cond)
-                .select("gtid", "op", "ddl", "schema_name", "table_name")
-                .collect()
-            ),
-            key=lambda r: r["gtid"],
-        )
-        runner.max_prescan_rows = max(runner.max_prescan_rows, len(rows))
-        yield wks, {
-            k: [r for r in rows if k * span <= r["gtid"] < (k + 1) * span]
-            for k in wks
-        }
+# Batches per DDL scan of a run: each scan collects one window's DDL rows,
+# so driver memory stays O(window), never O(run).
+PRESCAN_WINDOW = 256
 
 
 class ReplayRunner:
@@ -90,7 +64,6 @@ class ReplayRunner:
         config: ApplyConfig | None = None,
         lineage_dir: str | None = None,
         pipeline_depth: int = 1,
-        prescan_window: int = 256,
         partition_col: str | None = None,
         partition_span: int | None = None,
         archive_root: str | None = None,
@@ -104,13 +77,6 @@ class ReplayRunner:
         segment/DDL path unchanged, so evolution ordering is preserved.
         Exactly-once is untouched: a crash orphans staged (uncommitted,
         unreachable) files — the same story as any crashed writer.
-
-        ``prescan_window``: the DDL pre-scan collects at most this many
-        batches' worth of DDL rows at a time, so driver memory stays
-        O(window), never O(run) — an unbounded 10^10-event replay holds
-        ~window * span * ddl_rate rows (~tens) regardless of run length.
-        The pipeline rides across window boundaries (the next collect
-        runs on the driver thread while staged jobs proceed).
 
         ``partition_col``/``partition_span``: when the source archive is
         hive-partitioned by GTID range (dirs ``{partition_col}=N`` where
@@ -137,12 +103,11 @@ class ReplayRunner:
         self.applier = BatchApplier(table, config)
         self.lineage = LineageWriter(lineage_dir) if lineage_dir else None
         self.pipeline_depth = max(1, pipeline_depth)
-        self.prescan_window = max(1, prescan_window)
         self.partition_col = partition_col
         self.partition_span = partition_span
         self.archive_root = archive_root
         # instrumentation: max DDL rows held by any single window's
-        # pre-scan (tests assert boundedness)
+        # scan (tests assert boundedness)
         self.max_prescan_rows = 0
 
     def _partition_pred(self, lo_g: int, hi_g: int):
@@ -235,14 +200,36 @@ class ReplayRunner:
         ).collect()[0]
         return {"lo": row["lo"], "hi": row["hi"]}
 
+    def _slice(self, stream: DataFrame, lo_g: int, hi_g: int) -> DataFrame:
+        """GTIDs [lo_g, hi_g) of ``stream``: the range filter plus (when
+        declared) the partition predicate that lets the scan prune."""
+        return stream.filter((F.col("gtid") >= lo_g) & (F.col("gtid") < hi_g)
+                             & self._partition_pred(lo_g, hi_g))
+
     def batch_df(self, stream: DataFrame, k: int) -> DataFrame:
-        """Batch k's slice: the gtid range filter plus (when declared) the
-        partition predicate that lets the scan prune to the span's dirs."""
-        span = self.batch_span
-        return stream.filter(
-            (F.col("gtid") >= k * span) & (F.col("gtid") < (k + 1) * span)
-            & self._partition_pred(k * span, (k + 1) * span)
-        )
+        """Batch k's slice of ``stream``."""
+        return self._slice(stream, k * self.batch_span, (k + 1) * self.batch_span)
+
+    def _ddl_scans(self, stream: DataFrame, ks: list[int]):
+        """Yield ``(window_ks, {k: DdlScan})``: one :func:`scan_ddl` per
+        ``PRESCAN_WINDOW`` batches, over the window's slice, each batch
+        getting its own DDL rows. It observes no DML: stats of a whole
+        window almost never prove a batch's segment empty, so only the
+        segments :func:`~..operators.apply.segment_empty` proves without
+        stats skip their merge. DDL is ~1e-4 of a change stream, so each
+        collect is tiny, and windowing bounds driver memory at O(window)
+        for unbounded runs (round-2 review item #4)."""
+        span, exprs = self.batch_span, ddl_scan_exprs(None)
+        for i in range(0, len(ks), PRESCAN_WINDOW):
+            wks = ks[i:i + PRESCAN_WINDOW]
+            scan = scan_ddl(self._slice(stream, wks[0] * span, (wks[-1] + 1) * span),
+                            exprs)
+            self.max_prescan_rows = max(self.max_prescan_rows, len(scan.rows))
+            yield wks, {
+                k: DdlScan([r for r in scan.rows if k * span <= r["gtid"] < (k + 1) * span],
+                           None)
+                for k in wks
+            }
 
     def run(
         self,
@@ -329,23 +316,19 @@ class ReplayRunner:
                 self.lineage.write_batch(k, m, int((time.monotonic() - t0) * 1000),
                                          k * span, gtid_max)
 
-        def sequential(k: int, ddls: list) -> None:
+        def sequential(k: int, scan: DdlScan) -> None:
             t0 = time.monotonic()
-            m = self._apply(self.batch_df(stream, k), k, ddls,
+            m = self._apply(self.batch_df(stream, k), k, scan,
                             self._resumes(k, k0), complete(k))
             record(k, m, t0)
 
-        # Windowed DDL pre-scan: one collect per ``prescan_window`` batches
-        # (a JVM-side regex prefilter keeps non-DDL rows off the driver),
-        # never one collect for the whole run — driver memory stays
-        # O(window) on an unbounded replay.
-        windows = _ddl_windows(self, stream, ks, span)
+        windows = self._ddl_scans(stream, ks)
 
         depth = self.pipeline_depth
         if depth == 1 or self.applier.config.merge_mode != "mor":
-            for wks, ddl_by_k in windows:
+            for wks, scan_by_k in windows:
                 for k in wks:
-                    sequential(k, ddl_by_k[k])
+                    sequential(k, scan_by_k[k])
             total["watermark_gtid"] = self.watermark_gtid
             return total
 
@@ -355,7 +338,7 @@ class ReplayRunner:
         # the pipeline first and runs through the sequential path, so
         # schema evolution still segments exactly where it must. The
         # pipeline rides across window boundaries (the next window's
-        # pre-scan collect runs on this thread while staged jobs proceed).
+        # DDL scan runs on this thread while staged jobs proceed).
         from collections import deque
         from concurrent.futures import ThreadPoolExecutor
 
@@ -366,12 +349,12 @@ class ReplayRunner:
             record(k, self._commit(fut.result(), k, complete(k)), t0)
 
         with ThreadPoolExecutor(max_workers=depth, thread_name_prefix="cdc-stage") as ex:
-            for wks, ddl_by_k in windows:
+            for wks, scan_by_k in windows:
                 for k in wks:
-                    if ddl_by_k[k] or self._resumes(k, k0):
+                    if scan_by_k[k].rows or self._resumes(k, k0):
                         while inflight:
                             commit_oldest()
-                        sequential(k, ddl_by_k[k])
+                        sequential(k, scan_by_k[k])
                         continue
                     while len(inflight) >= depth:
                         commit_oldest()
@@ -405,12 +388,12 @@ class ReplayRunner:
         # a mid-batch crash leaves the table's sub-ids inside batch k
         return self.table.last_batch_id // 1024 == k
 
-    def _apply(self, df: DataFrame, k: int, ddls: list, resume: bool,
+    def _apply(self, df: DataFrame, k: int, scan: DdlScan, resume: bool,
                complete: dict) -> dict:
         return self.applier.apply(
             df, batch_id=k, final_extra_props=complete,
             extra_props={"replay_batch_span": str(self.batch_span)},
-            precollected_ddl=ddls, resume_within_batch=resume)
+            scan=scan, resume_within_batch=resume)
 
     def _stage(self, df: DataFrame):
         return self.applier.stage_batch(df)
@@ -446,7 +429,6 @@ class CatalogReplayRunner(ReplayRunner):
         config: ApplyConfig | None = None,
         lineage_dir: str | None = None,
         pipeline_depth: int = 1,
-        prescan_window: int = 256,
         partition_col: str | None = None,
         partition_span: int | None = None,
         archive_root: str | None = None,
@@ -460,8 +442,8 @@ class CatalogReplayRunner(ReplayRunner):
         from ..operators.multi import MultiTableApplier
 
         super().__init__(spark, None, batch_span, None, lineage_dir,
-                         pipeline_depth, prescan_window, partition_col,
-                         partition_span, archive_root)
+                         pipeline_depth, partition_col, partition_span,
+                         archive_root)
         self.catalog = catalog
         self.applier = MultiTableApplier(catalog, config)
 
@@ -495,9 +477,9 @@ class CatalogReplayRunner(ReplayRunner):
     def _resumes(self, k: int, k0: int) -> bool:
         return k == k0
 
-    def _apply(self, df: DataFrame, k: int, ddls: list, resume: bool,
+    def _apply(self, df: DataFrame, k: int, scan: DdlScan, resume: bool,
                complete: dict) -> dict:
-        return self.applier.apply(df, batch_id=k, precollected_ddl=ddls,
+        return self.applier.apply(df, batch_id=k, scan=scan,
                                   resume_within_batch=resume)
 
     def _stage(self, df: DataFrame):

@@ -45,8 +45,10 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
+import traceback
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -223,10 +225,65 @@ def _read_source(spark: SparkSession, source_dir: str,
                          quarantine=quarantine)
 
 
+# Spark 4.1's StreamExecution reads a failed foreachBatch as a stop iff its
+# Py4J error message matches PROXY_ERROR: this prefix, anything, then one of
+# these interrupt class names. The ``(.|\r\n|\r|\n)*`` between them
+# recurses once per character, so a message carrying a long Java stack
+# kills the stream thread with StackOverflowError and hides the cause.
+_PROXY_ERROR_PREFIX = "py4j.protocol.Py4JJavaError: An error occurred while calling"
+_INTERRUPTS = ("java.lang.InterruptedException", "java.io.InterruptedIOException",
+               "java.nio.channels.ClosedByInterruptException")
+
+
+def _root_cause(exc: BaseException) -> str:
+    """``Type: first line`` of the innermost exception of ``exc``'s chain;
+    for a Py4J error, the Java exception's line, not the call's."""
+    while exc.__cause__ is not None or exc.__context__ is not None:
+        exc = exc.__cause__ or exc.__context__
+    lines = [ln.strip() for ln in str(exc).splitlines() if ln.strip()]
+    if len(lines) > 1 and "An error occurred while calling" in lines[0]:
+        lines = lines[1:]
+    first = lines[0].lstrip(": ")[:200] if lines else ""
+    return f"{type(exc).__name__}: {first}"
+
+
+class EpochRefused(RuntimeError):
+    """An epoch the stopping shell refused before applying anything (see
+    :meth:`StreamingApplier.stop`): already short, it reaches Spark as is."""
+
+
+def _short_errors(handle, epoch_base: int = 0):
+    """``handle`` whose failures reach Spark as one short error.
+
+    A refused epoch passes through unchanged. Any other failure prints
+    its full traceback to stderr. An interrupted epoch (its traceback
+    names an interrupt class, Spark's own criterion) then re-raises with a
+    message that still matches PROXY_ERROR, so Spark still reads it as a
+    stop; anything else re-raises naming the epoch and the root cause.
+    Both messages stay a few hundred characters and name the epoch as the
+    shell does (Spark's id plus ``epoch_base``)."""
+    def guarded(batch_df, epoch_id: int) -> None:
+        try:
+            handle(batch_df, epoch_id)
+        except EpochRefused:
+            raise
+        except Exception as e:
+            tb = traceback.format_exc()
+            sys.stderr.write(tb)
+            epoch = int(epoch_id) + epoch_base
+            name = next((n for n in _INTERRUPTS if n in tb), None)
+            if name is not None:
+                raise RuntimeError(f"{_PROXY_ERROR_PREFIX} foreachBatch: epoch "
+                                   f"{epoch} interrupted ({name})") from None
+            raise RuntimeError(f"epoch {epoch} failed: {_root_cause(e)} "
+                               "(full traceback on stderr)") from None
+    return guarded
+
+
 def _foreach_batch(stream, handle, checkpoint_dir: str,
-                   available_now: bool) -> StreamingQuery:
+                   available_now: bool, epoch_base: int = 0) -> StreamingQuery:
     writer = (
-        stream.writeStream.foreachBatch(handle)
+        stream.writeStream.foreachBatch(_short_errors(handle, epoch_base))
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
@@ -343,13 +400,12 @@ class StreamingApplier:
         """Stop ``query`` between epochs: wait up to ``_STOP_TIMEOUT_S`` for
         the in-flight ``foreachBatch`` to return, then ``query.stop()``.
 
-        A bare ``query.stop()`` interrupts an in-flight epoch, and Spark
-        4.1's stop-time check of the resulting py4j traceback (a
-        per-character recursive regex in ``StreamExecution``) can die
-        with ``StackOverflowError``. An epoch the engine starts after the
-        wait (a file landed meanwhile) is refused: the handler raises
-        before it applies anything, so its offsets replay on the next
-        start. That ends the query with the refusal as its
+        A bare ``query.stop()`` interrupts an in-flight epoch and throws
+        away its work (the epoch replays on the next start; the handler
+        reports the interrupt so Spark reads it as a stop). An epoch the
+        engine starts after the wait (a file landed meanwhile) is refused:
+        the handler raises before it applies anything, so its offsets
+        replay on the next start. That ends the query with the refusal as its
         ``exception()`` and Spark logs it as an error; ``refused_epoch``
         then names the epoch, and a caller treats that exception as a
         clean stop."""
@@ -377,7 +433,7 @@ class StreamingApplier:
             with self._epoch_cv:
                 if self._stopping:
                     self.refused_epoch = epoch_id
-                    raise RuntimeError(
+                    raise EpochRefused(
                         f"epoch {epoch_id} not applied: the shell is stopping "
                         "(it replays on the next start)")
                 self._in_epoch = True
@@ -407,7 +463,8 @@ class StreamingApplier:
                     self._in_epoch = False
                     self._epoch_cv.notify_all()
 
-        return _foreach_batch(stream, handle, checkpoint_dir, available_now)
+        return _foreach_batch(stream, handle, checkpoint_dir, available_now,
+                              epoch_base)
 
 
 class StreamingWireApplier(StreamingApplier):
