@@ -41,7 +41,7 @@ def test_cow_mode_replay_matches_oracle_and_mor(spark, tmp_path):
 
     mor = LakeTable.create(spark, str(tmp_path / "mor"), SCHEMA, ["repo", "path"], num_buckets=8)
     ReplayRunner(spark, mor, batch_span=700,
-                 config=ApplyConfig(merge_mode="mor", mor_dedup=True)).run(stream)
+                 config=ApplyConfig(merge_mode="mor")).run(stream)
     assert df_fingerprint([r.asDict() for r in mor.read().collect()]) == expected
 
 

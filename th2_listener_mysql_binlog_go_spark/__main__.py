@@ -61,11 +61,15 @@ import sys
 
 
 def _spark(app: str):
+    """The CLI's session: ``spark-submit`` supplies master and memory.
+    Python call-site capture is off, as in ``session.build_session``: it
+    costs every Column call a stack walk and py4j round trips."""
     from pyspark.sql import SparkSession
 
     return (
         SparkSession.builder.appName(app)
         .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
 

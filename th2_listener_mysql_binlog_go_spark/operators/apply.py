@@ -181,11 +181,6 @@ class ApplyConfig:
     #   event's session schema wins and the statement-extracted schema is
     #   only the fallback when the event carries none.
     schema_precedence: str = "statement"
-    # naming parity with the reference's Configuration{Alias, Group}
-    # (configuration.go:28-33): group defaults to alias when empty
-    # (OrDefaultIfEmpty, component/utils.go:19-24)
-    alias: str = "cdc"
-    group: str = ""
     files_per_bucket: int = 1
     # bucket count for tables the applier CREATEs mid-stream (catalog mode)
     num_buckets: int = 16
@@ -193,7 +188,7 @@ class ApplyConfig:
     # concurrently within one batch (their tables are disjoint; only the
     # per-table snapshot commits serialize). 1 = fully sequential.
     table_parallelism: int = 4
-    # 'mor' appends LWW-deduped deltas (O(batch) per merge, the scale
+    # 'mor' appends per-bucket delta files (O(batch) per merge, the scale
     # path); 'cow' rewrites affected buckets (delta-free reads, exact
     # insert/update lineage split). See plans/lake.py.
     merge_mode: str = "mor"
@@ -204,9 +199,6 @@ class ApplyConfig:
     # inline-compaction-every-N-commits analogue). None disables (schedule
     # LakeTable.compact as maintenance); an int is an explicit threshold.
     auto_compact_deltas: int | str | None = "auto"
-    # collapse intra-batch per-key churn before appending deltas (extra key
-    # shuffle; read-time LWW makes it semantically optional)
-    mor_dedup: bool = False
     # auto-compaction tombstone retention (see LakeTable.compact): None =
     # resolved by the runner — the streaming shells set True (file-paced
     # epochs may interleave gtids, so folding a winning DELETE away lets a
@@ -216,9 +208,6 @@ class ApplyConfig:
 
     def observed_pairs(self) -> list[tuple[str, str]]:
         return [(s, t) for s, ts in self.observed.items() for t in ts]
-
-    def effective_group(self) -> str:
-        return self.group or self.alias
 
 
 class BatchApplier:
@@ -412,7 +401,6 @@ class BatchApplier:
         return self.table.stage_mor_delta(
             self.flatten_dml(batch),
             files_per_bucket=self.config.files_per_bucket,
-            mor_dedup=self.config.mor_dedup,
         )
 
     def commit_batch(self, staged: dict, batch_id: int,
@@ -600,7 +588,6 @@ class BatchApplier:
                         mode=self.config.merge_mode,
                         files_per_bucket=self.config.files_per_bucket,
                         auto_compact_deltas=self.config.auto_compact_deltas,
-                        mor_dedup=self.config.mor_dedup,
                         compact_keep_tombstones=bool(self.config.compact_keep_tombstones),
                         extra_properties=props,
                     )

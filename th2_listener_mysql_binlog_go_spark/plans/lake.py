@@ -23,8 +23,7 @@ format that supplies them, Iceberg/Hudi-style:
   * ``mode='mor'`` (default scale path): the batch is appended as
     per-bucket *delta* files — DELETE rows become tombstones. One
     bucket-hash shuffle + write, no sort: cost is O(batch) regardless of
-    table size and the target is never read (optional ``mor_dedup``
-    collapses intra-batch churn first).
+    table size and the target is never read.
     Readers resolve only *dirty* buckets (those holding deltas) with a
     last-writer-wins window; clean buckets stream straight from base
     files. Compaction folds deltas into fresh base files.
@@ -304,12 +303,16 @@ class Snapshot:
         return [by_id[i] for i in self.key_ids]
 
     def sub(self, files: list[dict]) -> "Snapshot":
-        return Snapshot(
-            version=self.version, columns=self.columns, key_ids=self.key_ids,
-            num_buckets=self.num_buckets, epoch=self.epoch,
-            epoch_schemas=self.epoch_schemas, files=files,
-            properties=self.properties,
-        )
+        return replace(self, files=files, parent=None)
+
+    def successor(self, **changes) -> "Snapshot":
+        """The next version committed on top of this one: ``version + 1``,
+        ``parent = version`` (what the commit's CAS checks HEAD against),
+        properties copied unless given, every other field kept unless
+        given."""
+        changes.setdefault("properties", dict(self.properties))
+        return replace(self, version=self.version + 1, parent=self.version,
+                       **changes)
 
 
 def _struct_of(columns: list[ColumnSpec], with_op: bool = False) -> T.StructType:
@@ -320,6 +323,17 @@ def _struct_of(columns: list[ColumnSpec], with_op: bool = False) -> T.StructType
     if with_op:
         fields.append(T.StructField(OP_COL, T.StringType(), False))
     return T.StructType(fields)
+
+
+def _lww_rank(*partition_by):
+    """Row number in THE last-writer-wins order, the one definition every
+    merge, read and maintenance window uses: the later ``(_gtid, _seq)``
+    first and, on a full tie, a change row before a folded ``KEEP`` row
+    (constant where no KEEP rows exist). Rank 1 is the winner of its
+    ``partition_by`` group."""
+    return F.row_number().over(Window.partitionBy(*partition_by).orderBy(
+        F.col(GTID_COL).desc(), F.col(SEQ_COL).desc(),
+        (F.col(OP_COL) == _KEEP).asc()))
 
 
 def altered_columns(columns: list[ColumnSpec], key_ids: list[int],
@@ -458,9 +472,8 @@ class LakeTable:
         concurrent pair is ingest + maintenance, where a losing
         compaction REBASES instead of re-running (:meth:`_commit_rewrite`)."""
         meta = self._meta_dir
-        if snap.version > 0:
-            expected_parent = snap.parent if snap.parent is not None else snap.version - 1
-            expected = f"v{expected_parent:012d}.json"
+        if snap.parent is not None:
+            expected = f"v{snap.parent:012d}.json"
             try:
                 with open(os.path.join(meta, "HEAD")) as f:
                     cur = f.read().strip()
@@ -537,12 +550,8 @@ class LakeTable:
         """Resolve base+delta rows: last writer (max (_gtid, _seq)) wins per
         key, DELETE tombstones drop the key. On full-order ties a non-KEEP
         (delta) row wins for determinism."""
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(GTID_COL).desc(), F.col(SEQ_COL).desc(),
-            (F.col(OP_COL) == _KEEP).asc(),
-        )
         return (
-            df.withColumn("_rn", F.row_number().over(w))
+            df.withColumn("_rn", _lww_rank(*keys))
             .filter((F.col("_rn") == 1) & (F.col(OP_COL) != "DELETE"))
             .drop("_rn")
         )
@@ -826,12 +835,8 @@ class LakeTable:
             df = df.filter(F.col(GTID_COL) > trunc)
         # the LWW winner, inline: max (_gtid,_seq) over the key's rows
         # (a single key — window over one tiny group), non-tombstone
-        w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-            F.col(GTID_COL).desc(), F.col(SEQ_COL).desc(),
-            (F.col(OP_COL) == _KEEP).asc(),
-        )
         cols = [c.name for c in snap.columns]
-        return (df.withColumn("_rn", F.row_number().over(w))
+        return (df.withColumn("_rn", _lww_rank(*keys))
                 .select(*cols, F.col(GTID_COL), F.col(SEQ_COL), F.col(OP_COL),
                         ((F.col("_rn") == 1) & (F.col(OP_COL) != "DELETE")
                          ).alias("_is_current"))
@@ -1129,12 +1134,7 @@ class LakeTable:
         os.makedirs(bdir, exist_ok=True)
         props = dict(target.properties)
         props["branch_fork_version"] = str(target.version)
-        fork = Snapshot(
-            version=target.version, columns=target.columns,
-            key_ids=target.key_ids, num_buckets=target.num_buckets,
-            epoch=target.epoch, epoch_schemas=target.epoch_schemas,
-            files=list(target.files), properties=props, parent=target.parent,
-        )
+        fork = replace(target, files=list(target.files), properties=props)
         bt = LakeTable(self.spark, self.root, fork, branch=name)
         bt._write_snapshot(fork)  # empty branch dir: missing HEAD passes CAS
         return bt
@@ -1279,11 +1279,11 @@ class LakeTable:
             # branch's own head always has it — re-stamp.
             props["branch_fork_version"] = head.properties[
                 "branch_fork_version"]
-        self._write_snapshot(Snapshot(
-            version=head.version + 1, columns=target.columns,
-            key_ids=target.key_ids, num_buckets=target.num_buckets,
-            epoch=new_epoch, epoch_schemas=epoch_schemas,
-            files=list(target.files), properties=props, parent=head.version,
+        self._write_snapshot(head.successor(
+            columns=target.columns, key_ids=target.key_ids,
+            num_buckets=target.num_buckets, epoch=new_epoch,
+            epoch_schemas=epoch_schemas, files=list(target.files),
+            properties=props,
         ))
         return {"version": head.version + 1, "restored": target.version,
                 "noop": False, "n_files": len(target.files),
@@ -1296,13 +1296,8 @@ class LakeTable:
         files/properties — lets old state be read pre-mapped to the
         current column set, so diffs never compare across renames by
         name."""
-        head = self.snapshot
-        return Snapshot(
-            version=-1, columns=head.columns, key_ids=head.key_ids,
-            num_buckets=num_buckets, epoch=head.epoch,
-            epoch_schemas=head.epoch_schemas, files=files,
-            properties=properties,
-        )
+        return replace(self.snapshot, version=-1, num_buckets=num_buckets,
+                       files=files, properties=properties, parent=None)
 
     def changes_plan(self, from_version: int | str, to_version: int | str | None = None) -> str:
         """Which plan :meth:`changes` will use for this window:
@@ -1437,9 +1432,7 @@ class LakeTable:
             if trunc >= 0:
                 new_rows = new_rows.filter(F.col(GTID_COL) > trunc)
             # net outcome per key: last (gtid, seq) wins, DELETEs KEPT
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(GTID_COL).desc(), F.col(SEQ_COL).desc())
-            net = (new_rows.withColumn("_rn", F.row_number().over(w))
+            net = (new_rows.withColumn("_rn", _lww_rank(*keys))
                    .filter(F.col("_rn") == 1).drop("_rn"))
             old_state = self.read(snapshot=self._hybrid_snapshot(
                 [fi for fi in from_snap.files if fi["bucket"] in touched],
@@ -1601,11 +1594,22 @@ class LakeTable:
         return self._bucket_expr_of(key_cols or self.snapshot.key_names,
                                     self.snapshot.num_buckets)
 
-    def _physical_out_cols(self, snap: Snapshot) -> list:
-        phys_names = {c.id: c.name for c in snap.epoch_schemas[str(snap.epoch)]}
-        return [F.col(c.name).alias(phys_names[c.id]) for c in snap.columns]
+    @staticmethod
+    def _salt_of(keys: list[str], files_per_bucket: int):
+        """A key's file slot within its bucket, in ``[0, files_per_bucket)``:
+        the write exchange and compaction's cell exchange both place a key
+        by (bucket, this salt)."""
+        return F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.lit(7)),
+                      F.lit(files_per_bucket))
 
-    def _bloom_write_options(self, snap: Snapshot | None = None) -> dict:
+    def _commit_dir(self, prefix: str) -> str:
+        """A fresh data dir for the next version's files (``prefix`` names
+        the writer: c=CoW, x=correction, k/t=compaction and its
+        tombstones, r/rt=rebucket and its tombstones)."""
+        return os.path.join(
+            "data", f"{prefix}{self.snapshot.version + 1:012d}-{uuid.uuid4().hex[:8]}")
+
+    def _bloom_write_options(self) -> dict:
         """Parquet bloom-filter writer options for the KEY columns when
         the table property ``bloom_keys`` is truthy (set at create or via
         ``set_properties``). Point reads (``lookup`` / ``key_history``)
@@ -1622,7 +1626,7 @@ class LakeTable:
         actual NDV at the target FPP. Keyed by the epoch's PHYSICAL
         column names — what the data files store; a renamed key keeps its
         blooms under the new name from the next commit on."""
-        snap = snap or self.snapshot
+        snap = self.snapshot
         if str(snap.properties.get("bloom_keys", "")).lower() not in ("true", "1"):
             return {}
         phys = {c.id: c.name for c in snap.epoch_schemas[str(snap.epoch)]}
@@ -1640,12 +1644,19 @@ class LakeTable:
         """The write-side exchange: dense (bucket, salt) cell ids map
         evenly and DETERMINISTICALLY onto ``min(cells,
         spark.sql.shuffle.partitions)`` reducers via
-        :func:`exact_partition_rep` — no range-sampling job. Exposed for
-        the plan-shape regression test (tests/test_exact_repartition.py)."""
+        :func:`exact_partition_rep` — no range-sampling job. ``files_per_bucket``
+        > 1 salts it so a hot bucket is written by several tasks/files.
+
+        ``repartitionByRange`` buys the same even placement only with an
+        extra job that re-executes the whole child plan to sample it, per
+        merge batch the largest constant serial cost of a replay. Naive
+        ``repartition(n, bucket, salt)`` is NOT equivalent: hash placement
+        of a few hundred distinct cells is balls-in-bins (some reducers
+        draw 3-4x the cells and straggle). Exposed for the plan-shape
+        regression test (tests/test_exact_repartition.py)."""
         snap = self.snapshot
-        keys = snap.key_names
         fpb = max(files_per_bucket, 1)
-        salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.lit(7)), F.lit(fpb))
+        salt = self._salt_of(snap.key_names, fpb)
         n_cells = (num_buckets or snap.num_buckets) * fpb
         shuffle_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         n_parts = max(1, min(n_cells, shuffle_parts))
@@ -1656,48 +1667,55 @@ class LakeTable:
         # maintenance-scale cell counts: fall back to sampling
         return df.repartitionByRange(F.col(BUCKET_COL), salt.alias("_salt"))
 
-    def _write_files(self, df: DataFrame, commit_dir_rel: str, with_op: bool,
-                     files_per_bucket: int = 1,
-                     obs: Observation | None = None,
+    def _write_files(self, df: DataFrame, commit_dir_rel: str, kind: str,
+                     with_op: bool, obs: Observation | None = None,
                      metrics: list | None = None,
-                     drop_deletes: bool = False) -> None:
-        """Write rows partitioned by bucket. ``files_per_bucket`` > 1 salts
-        the shuffle so a hot bucket is written by several tasks/files.
+                     drop_deletes: bool = False) -> tuple[list[dict], dict]:
+        """THE data-file writer: every data file of the table is written
+        here, so the physical layout is decided once — the current epoch's
+        physical column names, the meta columns (plus ``_op`` when
+        ``with_op``), one ``_bucket_p=<bucket>`` dir per bucket (parsed back
+        by :meth:`_list_commit_files`) and the key blooms
+        (:meth:`_bloom_write_options`). ``df`` arrives already placed by its
+        caller's exchange. Returns the written files (``kind``, current
+        epoch, unstamped) and the observed metrics.
 
-        The exchange is a DETERMINISTIC hash repartition on a precomputed
-        representative of the dense (bucket, salt) cell id
-        (:func:`exact_partition_rep`): contiguous cells map evenly onto
-        ``min(cells, spark.sql.shuffle.partitions)`` reducers with zero
-        sampling. The previous ``repartitionByRange`` bought the same even
-        placement by running an extra job that re-executed this whole
-        child plan just to sample it — per merge batch, that sampling pass
-        was the largest constant serial cost of a replay (round-4 review
-        #5). Naive ``repartition(n, bucket, salt)`` is NOT equivalent:
-        hash placement of a few hundred distinct cells is balls-in-bins
-        (some reducers draw 3-4x the cells and straggle); the
-        representative mapping keeps range partitioning's evenness.
-
-        ``obs``/``metrics`` attach an Observation *above* the exchange —
-        required when any sampling exchange sits below (double execution),
-        still the right home now (counts ride the one write job)."""
+        ``obs`` observes ``metrics`` in the write job itself, ABOVE the
+        caller's exchange (a sampling exchange below would run the child
+        twice and double-count), together with the per-bucket counts of
+        the rows written: returned as ``bucket_counts`` {bucket: rows},
+        observed up to ``_OBS_BUCKET_LIMIT`` buckets, read from the written
+        footers above it. ``drop_deletes`` (CoW): DELETE winners ride the
+        exchange so the observation counts them, then drop before the
+        write."""
         snap = self.snapshot
-        keys = snap.key_names
-        cols = self._physical_out_cols(snap) + [F.col(GTID_COL), F.col(SEQ_COL), F.col(BUCKET_COL)]
+        phys = {c.id: c.name for c in snap.epoch_schemas[str(snap.epoch)]}
+        cols = [F.col(c.name).alias(phys[c.id]) for c in snap.columns]
+        cols += [F.col(GTID_COL), F.col(SEQ_COL), F.col(BUCKET_COL)]
         if with_op:
             cols.append(F.col(OP_COL))
-        out = self._write_exchange(df, files_per_bucket)
+        observed = snap.num_buckets <= self._OBS_BUCKET_LIMIT
         if obs is not None:
-            out = out.observe(obs, *metrics)
+            if observed:
+                metrics = metrics + self._bucket_count_metrics(
+                    snap.num_buckets, exclude_deletes=drop_deletes)
+            df = df.observe(obs, *metrics)
         if drop_deletes:
-            # CoW: DELETE winners ride the exchange so the observation can
-            # count them, then drop before the write.
-            out = out.filter(F.col(OP_COL) != "DELETE")
+            df = df.filter(F.col(OP_COL) != "DELETE")
         (
-            out.select(*cols, F.col(BUCKET_COL).alias("_bucket_p"))
-            .write.options(**self._bloom_write_options(snap))
+            df.select(*cols, F.col(BUCKET_COL).alias("_bucket_p"))
+            .write.options(**self._bloom_write_options())
             .partitionBy("_bucket_p")
             .parquet(os.path.join(self.root, commit_dir_rel))
         )
+        files = self._list_commit_files(commit_dir_rel, snap.epoch, kind)
+        if obs is None:
+            return files, {}
+        m = self._obs_get_safe(obs)
+        m["bucket_counts"] = (
+            {b: int(n) for b, n in enumerate(m.get("bucket_counts") or []) if n}
+            if observed else self._footer_rows(self.root, files))
+        return files, m
 
     def _list_commit_files(self, commit_dir_rel: str, epoch: int, kind: str) -> list[dict]:
         out = []
@@ -1771,12 +1789,6 @@ class LakeTable:
         return [F.expr(f"array({sums}) AS bucket_counts")]
 
     @staticmethod
-    def _obs_bucket_counts(m: dict, num_buckets: int) -> dict[int, int] | None:
-        if num_buckets > LakeTable._OBS_BUCKET_LIMIT:
-            return None
-        return {b: int(n) for b, n in enumerate(m.get("bucket_counts") or []) if n}
-
-    @staticmethod
     def _footer_rows(root: str, files: list[dict]) -> dict[int, int]:
         """Per-bucket row counts from parquet footers (fallback for tables
         beyond _OBS_BUCKET_LIMIT buckets; metadata-only reads, fanned out
@@ -1835,7 +1847,6 @@ class LakeTable:
         self,
         changes: DataFrame,
         files_per_bucket: int = 1,
-        mor_dedup: bool = False,
         label: str = "staged",
     ) -> dict:
         """Run the expensive half of a MOR merge — the delta-file write job —
@@ -1852,48 +1863,32 @@ class LakeTable:
 
         t_start = _time.monotonic()
         snap = self.snapshot
-        keys = snap.key_names
         changes = self._projected_changes(changes)
         obs = Observation(f"stage-{label}-{uuid.uuid4().hex[:6]}")
         # Append the batch as per-bucket deltas. LWW resolution happens at
         # read/compaction time anyway (keyed on _gtid), so the write needs
         # NO key shuffle and NO sort — one bucket-hash exchange + parquet
-        # write, the cheapest possible apply. ``mor_dedup`` optionally
-        # collapses intra-batch duplicates first (an extra key shuffle) to
-        # cut delta volume on streams with heavy per-key churn.
-        winners = changes
-        if mor_dedup:
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(GTID_COL).desc(), F.col(SEQ_COL).desc()
-            )
-            winners = changes.withColumn("_rn", F.row_number().over(w)).filter(
-                F.col("_rn") == 1
-            ).drop("_rn")
+        # write, the cheapest possible apply.
         metrics = [
             F.sum(F.when(F.col(OP_COL) != "DELETE", 1).otherwise(0)).alias("rows_upserted"),
             F.sum(F.when(F.col(OP_COL) == "DELETE", 1).otherwise(0)).alias("rows_deleted"),
             F.max(F.col(GTID_COL)).alias("max_gtid"),
             F.min(F.col(GTID_COL)).alias("min_gtid"),
         ]
-        if snap.num_buckets <= self._OBS_BUCKET_LIMIT:
-            metrics += self._bucket_count_metrics(snap.num_buckets, exclude_deletes=False)
-        commit_dir_rel = os.path.join("data", f"s{uuid.uuid4().hex[:12]}")
-        self._write_files(winners, commit_dir_rel, with_op=True,
-                          files_per_bucket=files_per_bucket,
-                          obs=obs, metrics=metrics)
-        m = self._obs_get_safe(obs)
-        written = self._stamp_gtid_bounds(
-            self._list_commit_files(commit_dir_rel, snap.epoch, "delta"),
-            m.get("min_gtid"), m.get("max_gtid"))
+        written, m = self._write_files(
+            self._write_exchange(changes, files_per_bucket),
+            os.path.join("data", f"s{uuid.uuid4().hex[:12]}"), "delta",
+            with_op=True, obs=obs, metrics=metrics)
         return {
-            "written": written,
+            "written": self._stamp_gtid_bounds(
+                written, m.get("min_gtid"), m.get("max_gtid")),
             "epoch": snap.epoch,
             "counts": {
                 "rows_inserted": int(m.get("rows_upserted") or 0),
                 "rows_updated": 0,
                 "rows_deleted": int(m.get("rows_deleted") or 0),
             },
-            "bucket_counts": self._obs_bucket_counts(m, snap.num_buckets),
+            "bucket_counts": m["bucket_counts"],
             "min_gtid": m.get("min_gtid"),
             "max_gtid": m.get("max_gtid"),
             "t_write_s": round(_time.monotonic() - t_start, 4),
@@ -1933,24 +1928,18 @@ class LakeTable:
                 f"staged write at epoch {staged['epoch']} cannot commit at "
                 f"epoch {snap.epoch}: schema evolved mid-pipeline (barrier bug)"
             )
-        written = staged["written"]
-        per_bucket = staged.get("bucket_counts")
-        if per_bucket is None:  # > _OBS_BUCKET_LIMIT buckets: footer fallback
-            per_bucket = self._footer_rows(self.root, written)
-        props = self._progress_properties(staged["max_gtid"], batch_id, extra_properties)
-        new_version = snap.version + 1
-        self._write_snapshot(Snapshot(
-            version=new_version, columns=snap.columns, key_ids=snap.key_ids,
-            num_buckets=snap.num_buckets, epoch=snap.epoch,
-            epoch_schemas=snap.epoch_schemas, files=snap.files + written,
-            properties=props, parent=snap.version,
-        ))
+        per_bucket = staged["bucket_counts"]
+        new = snap.successor(
+            files=snap.files + staged["written"],
+            properties=self._progress_properties(staged["max_gtid"], batch_id,
+                                                 extra_properties))
+        self._write_snapshot(new)
         result = {
             "skipped": False, "batch_id": batch_id, **staged["counts"],
             "gtid_min": staged["min_gtid"], "gtid_max": staged["max_gtid"],
             "buckets_touched": len(per_bucket),
             "partitions": sorted(per_bucket.items()),
-            "version": new_version,
+            "version": new.version,
             "t_write_s": staged["t_write_s"],
             "t_footer_s": 0.0,
             "t_commit_s": round(_time.monotonic() - t0, 4),
@@ -1981,7 +1970,6 @@ class LakeTable:
         extra_properties: dict[str, str] | None = None,
         files_per_bucket: int = 1,
         auto_compact_deltas: int | str | None = None,
-        mor_dedup: bool = False,
         compact_keep_tombstones: bool = False,
     ) -> dict:
         """MERGE a change batch (the Iceberg ``MERGE INTO`` analogue).
@@ -2012,7 +2000,7 @@ class LakeTable:
             return {"skipped": True, "batch_id": batch_id}
         if mode == "mor":
             return self.commit_staged(
-                self.stage_mor_delta(changes, files_per_bucket, mor_dedup,
+                self.stage_mor_delta(changes, files_per_bucket,
                                      label=f"merge-{batch_id}"),
                 batch_id, extra_properties, auto_compact_deltas,
                 files_per_bucket, compact_keep_tombstones)
@@ -2021,22 +2009,16 @@ class LakeTable:
         keys = snap.key_names
         changes = self._projected_changes(changes)
 
-        new_version = snap.version + 1
         obs = Observation(f"merge-{batch_id}")
-        affected = sorted(r[0] for r in changes.select(BUCKET_COL).distinct().collect())
-        affected_set = set(affected)
-        touched = [fi for fi in snap.files if fi["bucket"] in affected_set]
-        untouched = [fi for fi in snap.files if fi["bucket"] not in affected_set]
+        affected = {r[0] for r in changes.select(BUCKET_COL).distinct().collect()}
+        touched = [fi for fi in snap.files if fi["bucket"] in affected]
+        untouched = [fi for fi in snap.files if fi["bucket"] not in affected]
         target = self.read(include_meta=True, snapshot=snap.sub(touched))
         unioned = target.withColumn(OP_COL, F.lit(_KEEP)).unionByName(changes)
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(GTID_COL).desc(), F.col(SEQ_COL).desc(),
-            (F.col(OP_COL) == _KEEP).asc(),
-        )
         wf = Window.partitionBy(*keys).rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
-        ranked = unioned.withColumn("_rn", F.row_number().over(w)).withColumn(
+        ranked = unioned.withColumn("_rn", _lww_rank(*keys)).withColumn(
             "_had_target", F.max(F.when(F.col(OP_COL) == _KEEP, 1).otherwise(0)).over(wf)
         )
         is_change = F.col(OP_COL) != _KEEP
@@ -2057,51 +2039,32 @@ class LakeTable:
             F.min(F.when(F.col(OP_COL) != "DELETE", F.col(GTID_COL)))
             .alias("w_min_gtid"),
         ]
-        if snap.num_buckets <= self._OBS_BUCKET_LIMIT:
-            # written base rows = winners minus DELETE winners
-            metrics += self._bucket_count_metrics(snap.num_buckets, exclude_deletes=True)
-        commit_dir_rel = os.path.join("data", f"c{new_version:012d}-{uuid.uuid4().hex[:8]}")
-        self._write_files(winners, commit_dir_rel, with_op=False,
-                          files_per_bucket=files_per_bucket,
-                          obs=obs, metrics=metrics, drop_deletes=True)
-        m = self._obs_get_safe(obs)
-        written = self._stamp_gtid_bounds(
-            self._list_commit_files(commit_dir_rel, snap.epoch, "base"),
-            m.get("w_min_gtid"), m.get("w_max_gtid"))
-        counts = {
-            "rows_inserted": int(m.get("rows_inserted") or 0),
-            "rows_updated": int(m.get("rows_updated") or 0),
-            "rows_deleted": int(m.get("rows_deleted") or 0),
-        }
-
+        written, m = self._write_files(
+            self._write_exchange(winners, files_per_bucket), self._commit_dir("c"),
+            "base", with_op=False, obs=obs, metrics=metrics, drop_deletes=True)
+        self._stamp_gtid_bounds(written, m.get("w_min_gtid"), m.get("w_max_gtid"))
         t_write_done = _time.monotonic()
-        per_bucket = self._obs_bucket_counts(m, snap.num_buckets)
-        if per_bucket is None:  # > _OBS_BUCKET_LIMIT buckets: footer fallback
-            per_bucket = self._footer_rows(self.root, written)
-        t_footer_done = _time.monotonic()
-        props = self._progress_properties(m.get("max_gtid"), batch_id, extra_properties)
-
-        self._write_snapshot(Snapshot(
-            version=new_version, columns=snap.columns, key_ids=snap.key_ids,
-            num_buckets=snap.num_buckets, epoch=snap.epoch,
-            epoch_schemas=snap.epoch_schemas, files=untouched + written,
-            properties=props, parent=snap.version,
-        ))
+        new = snap.successor(
+            files=untouched + written,
+            properties=self._progress_properties(m.get("max_gtid"), batch_id,
+                                                 extra_properties))
+        self._write_snapshot(new)
         return {
             "skipped": False,
             "batch_id": batch_id,
-            **counts,
+            "rows_inserted": int(m.get("rows_inserted") or 0),
+            "rows_updated": int(m.get("rows_updated") or 0),
+            "rows_deleted": int(m.get("rows_deleted") or 0),
             "gtid_min": m.get("min_gtid"),
             "gtid_max": m.get("max_gtid"),
-            "buckets_touched": len(per_bucket),
-            "partitions": sorted(per_bucket.items()),
-            "version": new_version,
-            # phase walls: the write job (parallel) vs driver-serial
-            # bookkeeping (footer metadata reads + snapshot commit) — what
-            # the scaling bench attributes Amdahl losses to
+            "buckets_touched": len(m["bucket_counts"]),
+            "partitions": sorted(m["bucket_counts"].items()),
+            "version": new.version,
+            # phase walls: the write job (parallel, per-bucket counts
+            # included) vs the driver-serial snapshot commit
             "t_write_s": round(t_write_done - t_start, 4),
-            "t_footer_s": round(t_footer_done - t_write_done, 4),
-            "t_commit_s": round(_time.monotonic() - t_footer_done, 4),
+            "t_footer_s": 0.0,
+            "t_commit_s": round(_time.monotonic() - t_write_done, 4),
         }
 
     # ------------------------------------------- out-of-band corrections
@@ -2189,7 +2152,6 @@ class LakeTable:
 
     def _commit_correction(self, rows: DataFrame, op: str,
                            files_per_bucket: int) -> dict:
-        import shutil
         import time as _time
 
         t0 = _time.monotonic()
@@ -2211,46 +2173,33 @@ class LakeTable:
             .withColumn(SEQ_COL, F.lit(seq).cast("bigint"))
             .withColumn(BUCKET_COL, self.bucket_expr())
         )
-        new_version = snap.version + 1
-        obs = Observation(f"correction-{new_version}")
-        metrics = [F.count(F.lit(1)).alias("rows")]
-        if snap.num_buckets <= self._OBS_BUCKET_LIMIT:
-            metrics += self._bucket_count_metrics(
-                snap.num_buckets, exclude_deletes=False)
-        commit_dir_rel = os.path.join(
-            "data", f"x{new_version:012d}-{uuid.uuid4().hex[:8]}")
-        self._write_files(changes, commit_dir_rel, with_op=True,
-                          files_per_bucket=files_per_bucket,
-                          obs=obs, metrics=metrics)
-        m = self._obs_get_safe(obs)
+        obs = Observation(f"correction-{snap.version + 1}")
+        commit_dir_rel = self._commit_dir("x")
+        written, m = self._write_files(
+            self._write_exchange(changes, files_per_bucket), commit_dir_rel,
+            "delta", with_op=True, obs=obs,
+            metrics=[F.count(F.lit(1)).alias("rows")])
         # the emptiness decision must NOT ride the Observation (its get
         # can fail independently of the write — a swallowed metrics error
         # reading as rows=0 would rmtree a committed takedown): zero
         # matches is decided by the written FILE SET, which the
         # partitioned write leaves empty exactly when no row matched
-        written_files = self._list_commit_files(
-            commit_dir_rel, snap.epoch, "delta")
-        if not written_files:
+        if not written:
             shutil.rmtree(os.path.join(self.root, commit_dir_rel),
                           ignore_errors=True)
             return {"op": op, "rows": 0, "skipped": True}
-        written = self._stamp_gtid_bounds(written_files, wm, wm)
         props = dict(snap.properties)
         props["correction_count"] = str(corr_n + 1)
-        self._write_snapshot(Snapshot(
-            version=new_version, columns=snap.columns, key_ids=snap.key_ids,
-            num_buckets=snap.num_buckets, epoch=snap.epoch,
-            epoch_schemas=snap.epoch_schemas, files=snap.files + written,
-            properties=props, parent=snap.version,
-        ))
-        per_bucket = self._obs_bucket_counts(m, snap.num_buckets)
-        if per_bucket is None:
-            per_bucket = self._footer_rows(self.root, written)
+        new = snap.successor(
+            files=snap.files + self._stamp_gtid_bounds(written, wm, wm),
+            properties=props)
+        self._write_snapshot(new)
+        per_bucket = m["bucket_counts"]
         n = m.get("rows")
         if n is None:  # metrics unavailable — count from the fallback
             n = sum(per_bucket.values())
         return {"op": op, "rows": int(n), "gtid": wm, "seq": seq,
-                "version": new_version,
+                "version": new.version,
                 "buckets_touched": len(per_bucket),
                 "t_total_s": round(_time.monotonic() - t0, 4)}
 
@@ -2263,12 +2212,10 @@ class LakeTable:
         epoch_schemas = dict(snap.epoch_schemas)
         if bump_epoch:
             epoch_schemas[str(new_epoch)] = [ColumnSpec(c.id, c.name, c.type, c.nullable) for c in columns]
-        props = dict(snap.properties)
-        props.update(extra_properties or {})
-        self._write_snapshot(Snapshot(
-            version=snap.version + 1, columns=columns, key_ids=snap.key_ids,
-            num_buckets=snap.num_buckets, epoch=new_epoch, epoch_schemas=epoch_schemas,
-            files=snap.files if files is None else files, properties=props, parent=snap.version,
+        self._write_snapshot(snap.successor(
+            columns=columns, epoch=new_epoch, epoch_schemas=epoch_schemas,
+            files=snap.files if files is None else files,
+            properties={**snap.properties, **(extra_properties or {})},
         ))
 
     def alter(self, cmd: AlterCommand, extra_properties: dict[str, str] | None = None) -> None:
@@ -2437,76 +2384,29 @@ class LakeTable:
             return snap.num_buckets
         if new_num_buckets < 1:
             raise ValueError(f"num_buckets must be >= 1, got {new_num_buckets}")
-        keys = snap.key_names
         # LWW-resolved state with lineage meta; tombstones and truncated
         # rows are already gone, so the rewrite also acts as a compaction
-        df = self.read(include_meta=True)
-        new_bucket = F.pmod(
-            F.xxhash64(*[F.col(k) for k in keys]), F.lit(new_num_buckets)
-        ).cast("int")
-        df = df.withColumn(BUCKET_COL, new_bucket)
-
-        cols = self._physical_out_cols(snap) + [F.col(GTID_COL), F.col(SEQ_COL), F.col(BUCKET_COL)]
-        new_version = snap.version + 1
-        commit_dir_rel = os.path.join("data", f"r{new_version:012d}-{uuid.uuid4().hex[:8]}")
-        # same zero-sampling deterministic exchange as _write_files, sized
-        # for the NEW bucket count
-        out = self._write_exchange(df, files_per_bucket,
-                                   num_buckets=new_num_buckets)
-        (
-            out.select(*cols, F.col(BUCKET_COL).alias("_bucket_p"))
-            .write.options(**self._bloom_write_options(snap))
-            .partitionBy("_bucket_p")
-            .parquet(os.path.join(self.root, commit_dir_rel))
-        )
-        files = self._list_commit_files(commit_dir_rel, snap.epoch, "base")
-        trunc = int(snap.properties.get("truncate_gtid", "-1"))
+        new_bucket = self._bucket_expr_of(snap.key_names, new_num_buckets)
+        df = self.read(include_meta=True).withColumn(BUCKET_COL, new_bucket)
+        # same zero-sampling deterministic exchange as a merge, sized for
+        # the NEW bucket count
+        files, _ = self._write_files(
+            self._write_exchange(df, files_per_bucket, num_buckets=new_num_buckets),
+            self._commit_dir("r"), "base", with_op=False)
+        trunc = self.truncate_gtid
+        live = [fi for fi in snap.files if not self._gtid_dead(fi, trunc)]
         if keep_tombstones is None:
             keep_tombstones = any(fi.get("tombstones") for fi in snap.files)
         if keep_tombstones:
-            # winning DELETEs, re-bucketed under the NEW function (same
-            # DELETE-only plan as compact's tombstone pass — the predicate
-            # pushes into the delta scans, only tombstone rows shuffle)
-            delta_in = [fi for fi in snap.files
-                        if fi.get("kind") == "delta"
-                        and not self._gtid_dead(fi, trunc)]
-            dd = self._read_mapped(snap, delta_in, with_op=True)
-            if dd is not None:
-                dd = dd.filter(F.col(OP_COL) == "DELETE")
-                if trunc >= 0:
-                    dd = dd.filter(F.col(GTID_COL) > trunc)
-                dd = dd.withColumn(BUCKET_COL, new_bucket)
-                wd = Window.partitionBy(BUCKET_COL, *keys).orderBy(
-                    F.col(GTID_COL).desc(), F.col(SEQ_COL).desc())
-                tombs = (dd.withColumn("_rn", F.row_number().over(wd))
-                         .filter(F.col("_rn") == 1))
-                tomb_dir_rel = os.path.join(
-                    "data", f"rt{new_version:012d}-{uuid.uuid4().hex[:8]}")
-                (
-                    tombs.select(*cols, F.col(OP_COL),
-                                 F.col(BUCKET_COL).alias("_bucket_p"))
-                    .repartition(F.col(BUCKET_COL))
-                    .write.options(**self._bloom_write_options(snap))
-                    .partitionBy("_bucket_p")
-                    .parquet(os.path.join(self.root, tomb_dir_rel))
-                )
-                tomb_files = self._list_commit_files(
-                    tomb_dir_rel, snap.epoch, "delta")
-                for fi in tomb_files:
-                    fi["tombstones"] = True
-                files = files + tomb_files
-        los = [fi.get("gtid_lo") for fi in snap.files]
-        his = [fi.get("gtid_hi") for fi in snap.files]
-        if los and all(v is not None for v in los + his):
-            self._stamp_gtid_bounds(
-                files, max(min(los), trunc + 1) if trunc >= 0 else min(los),
-                max(his))
-        self._write_snapshot(Snapshot(
-            version=new_version, columns=snap.columns, key_ids=snap.key_ids,
-            num_buckets=new_num_buckets, epoch=snap.epoch,
-            epoch_schemas=snap.epoch_schemas, files=files,
-            properties=dict(snap.properties), parent=snap.version,
-        ))
+            # winning DELETEs, re-bucketed under the NEW function
+            deltas = self._read_mapped(
+                snap, [fi for fi in live if fi.get("kind") == "delta"], with_op=True)
+            if deltas is not None:
+                files += self._write_tombstones(
+                    deltas.withColumn(BUCKET_COL, new_bucket), "rt")
+        self._write_snapshot(snap.successor(
+            num_buckets=new_num_buckets,
+            files=self._stamp_envelope(files, live, trunc)))
         return new_num_buckets
 
     def _commit_rewrite(self, snap: Snapshot, consumed: set[str],
@@ -2539,14 +2439,9 @@ class LakeTable:
         based = {fi["path"] for fi in snap.files}
         for attempt in range(max_retries + 1):
             try:
-                self._write_snapshot(Snapshot(
-                    version=head.version + 1, columns=head.columns,
-                    key_ids=head.key_ids, num_buckets=head.num_buckets,
-                    epoch=head.epoch, epoch_schemas=head.epoch_schemas,
+                self._write_snapshot(head.successor(
                     files=[fi for fi in head.files
-                           if fi["path"] not in consumed] + new_files,
-                    properties=dict(head.properties), parent=head.version,
-                ))
+                           if fi["path"] not in consumed] + new_files))
                 return
             except ConcurrentCommitError:
                 if attempt >= max_retries:
@@ -2657,10 +2552,9 @@ class LakeTable:
             todo &= set(target_buckets)
         if not todo:
             return 0
-        keep = [fi for fi in snap.files if fi["bucket"] not in todo]
         src = [fi for fi in snap.files if fi["bucket"] in todo]
         keys = snap.key_names
-        trunc = int(snap.properties.get("truncate_gtid", "-1"))
+        trunc = self.truncate_gtid
 
         # files whose whole gtid range died under the TRUNCATE marker are
         # planned out (their rows would all be row-filtered anyway)
@@ -2693,18 +2587,18 @@ class LakeTable:
             # 8-32 MB files) while keeping a 1-dirty-bucket rewrite
             # parallel enough on any realistic executor count.
             fpb = max(fpb, min(-(-4 * par // max(len(todo), 1)), 64))
-        salt = F.pmod(F.xxhash64(*[F.col(k) for k in keys], F.lit(7)), F.lit(fpb))
         n_cells = len(todo) * fpb
         n_parts = min(n_cells, max(4 * par, -(-len(src) // 8)))
         # Deterministic even placement of the dense (dirty-bucket, salt)
-        # cell id — same zero-sampling exchange as _write_files. The
+        # cell id — same zero-sampling exchange as _write_exchange. The
         # mapped column LEADS the window's partitionBy so Catalyst proves
         # the clustering and elides the second exchange (it is a pure
         # function of (bucket, salt), so the window's groups are
         # unchanged); hash-partitioning on an expression absent from the
         # window keys would otherwise reintroduce a full key shuffle.
-        dense_idx = {b: i for i, b in enumerate(sorted(todo))}
+        df = df.withColumn("_salt", self._salt_of(keys, fpb))
         if n_parts <= EXACT_REPARTITION_MAX:
+            dense_idx = {b: i for i, b in enumerate(sorted(todo))}
             bucket_rank = F.element_at(
                 F.create_map(*[F.lit(v) for bi in dense_idx.items() for v in bi]),
                 F.col(BUCKET_COL),
@@ -2712,21 +2606,13 @@ class LakeTable:
             cell = bucket_rank * fpb + F.col("_salt")
             cellpart = exact_partition_rep(
                 F.floor(cell * n_parts / F.lit(n_cells)), n_parts)
-            out = (
-                df.withColumn("_salt", salt)
-                .withColumn("_cellpart", cellpart)
-                .repartition(n_parts, F.col("_cellpart"))
-            )
+            out = df.withColumn("_cellpart", cellpart).repartition(
+                n_parts, F.col("_cellpart"))
         else:  # beyond the codegen-friendly mapping size: sampling fallback
-            out = df.withColumn("_salt", salt).withColumn(
-                "_cellpart", F.col(BUCKET_COL)
-            ).repartitionByRange(n_parts, F.col(BUCKET_COL), F.col("_salt"))
-        w = Window.partitionBy("_cellpart", BUCKET_COL, "_salt", *keys).orderBy(
-            F.col(GTID_COL).desc(), F.col(SEQ_COL).desc(),
-            (F.col(OP_COL) == _KEEP).asc(),
-        )
+            out = df.withColumn("_cellpart", F.col(BUCKET_COL)).repartitionByRange(
+                n_parts, F.col(BUCKET_COL), F.col("_salt"))
         winners = (
-            out.withColumn("_rn", F.row_number().over(w))
+            out.withColumn("_rn", _lww_rank("_cellpart", BUCKET_COL, "_salt", *keys))
             .filter((F.col("_rn") == 1) & (F.col(OP_COL) != "DELETE"))
         )
         if sort_by:
@@ -2737,16 +2623,8 @@ class LakeTable:
             # clustering; with the bucket as prefix (alias-aware ordering
             # survives the projection) the writer reuses this sort.
             winners = winners.sortWithinPartitions(BUCKET_COL, *sort_by)
-        cols = self._physical_out_cols(snap) + [F.col(GTID_COL), F.col(SEQ_COL), F.col(BUCKET_COL)]
-        new_version = snap.version + 1
-        commit_dir_rel = os.path.join("data", f"k{new_version:012d}-{uuid.uuid4().hex[:8]}")
-        (
-            winners.select(*cols, F.col(BUCKET_COL).alias("_bucket_p"))
-            .write.options(**self._bloom_write_options(snap))
-            .partitionBy("_bucket_p")
-            .parquet(os.path.join(self.root, commit_dir_rel))
-        )
-        tomb_files: list[dict] = []
+        out_files, _ = self._write_files(winners, self._commit_dir("k"), "base",
+                                         with_op=False)
         if keep_tombstones and delta is not None:
             # Winning DELETEs, computed over the DELTA inputs alone: a
             # base KEEP can never be a DELETE, so any key whose GLOBAL
@@ -2755,44 +2633,44 @@ class LakeTable:
             # fold anyway, so the (rare) extra tombstone loses read-time
             # LWW and is harmless. Small by the MOR premise: one row per
             # currently-deleted key of the dirty buckets.
-            # DELETE-only window: the op predicate pushes into the delta
-            # scans and only tombstone candidates shuffle. Winner among
-            # DELETEs can exceed the winner-is-DELETE set (a key whose
-            # global winner is a later INSERT still emits its max DELETE)
-            # — harmless: the extra tombstone loses read-time LWW.
-            dd = delta.filter(F.col(OP_COL) == "DELETE")
-            if trunc >= 0:
-                dd = dd.filter(F.col(GTID_COL) > trunc)
-            wd = Window.partitionBy(BUCKET_COL, *keys).orderBy(
-                F.col(GTID_COL).desc(), F.col(SEQ_COL).desc())
-            tombs = (
-                dd.withColumn("_rn", F.row_number().over(wd))
-                .filter(F.col("_rn") == 1)
-            )
-            tomb_dir_rel = os.path.join(
-                "data", f"t{new_version:012d}-{uuid.uuid4().hex[:8]}")
-            (
-                tombs.select(*cols, F.col(OP_COL),
-                             F.col(BUCKET_COL).alias("_bucket_p"))
-                .repartition(F.col(BUCKET_COL))
-                .write.options(**self._bloom_write_options(snap))
-                .partitionBy("_bucket_p")
-                .parquet(os.path.join(self.root, tomb_dir_rel))
-            )
-            tomb_files = self._list_commit_files(tomb_dir_rel, snap.epoch, "delta")
-            for fi in tomb_files:
-                fi["tombstones"] = True
-        # conservative envelope from the inputs' stats (raised past the
-        # truncate marker the rewrite filtered out); inputs without stats
-        # leave the outputs unstamped
-        los = [fi.get("gtid_lo") for fi in live_src]
-        his = [fi.get("gtid_hi") for fi in live_src]
-        out_files = self._list_commit_files(commit_dir_rel, snap.epoch, "base")
-        if los and all(v is not None for v in los + his):
-            self._stamp_gtid_bounds(
-                out_files + tomb_files,
-                max(min(los), trunc + 1) if trunc >= 0 else min(los),
-                max(his))
+            out_files += self._write_tombstones(delta, "t")
         self._commit_rewrite(snap, {fi["path"] for fi in src},
-                             out_files + tomb_files)
+                             self._stamp_envelope(out_files, live_src, trunc))
         return len(todo)
+
+    def _write_tombstones(self, deltas: DataFrame, prefix: str) -> list[dict]:
+        """THE tombstone retention pass of :meth:`compact` and
+        :meth:`rebucket` (``keep_tombstones``): per (``_bucket``, key), the
+        LWW winner among the DELETE rows of ``deltas`` above the TRUNCATE
+        marker, written as small per-bucket delta files flagged
+        ``tombstones``. The op predicate sits below the window, so it
+        reaches the delta parquet scans and only tombstone candidates
+        shuffle. The winner among DELETEs can exceed the winner-is-DELETE
+        set (a key whose global winner is a later INSERT still emits its
+        latest DELETE) — harmless: that tombstone loses read-time LWW."""
+        keys = self.snapshot.key_names
+        trunc = self.truncate_gtid
+        dd = deltas.filter(F.col(OP_COL) == "DELETE")
+        if trunc >= 0:
+            dd = dd.filter(F.col(GTID_COL) > trunc)
+        tombs = (dd.withColumn("_rn", _lww_rank(BUCKET_COL, *keys))
+                 .filter(F.col("_rn") == 1))
+        files, _ = self._write_files(tombs.repartition(F.col(BUCKET_COL)),
+                                     self._commit_dir(prefix), "delta", with_op=True)
+        for fi in files:
+            fi["tombstones"] = True
+        return files
+
+    @classmethod
+    def _stamp_envelope(cls, files: list[dict], inputs: list[dict],
+                        trunc: int) -> list[dict]:
+        """Stamp a rewrite's output ``files`` with the conservative gtid
+        envelope of its LIVE ``inputs``: lowest ``gtid_lo`` raised past the
+        TRUNCATE marker the rewrite filtered out, highest ``gtid_hi``.
+        Inputs without stats leave the outputs unstamped."""
+        los = [fi.get("gtid_lo") for fi in inputs]
+        his = [fi.get("gtid_hi") for fi in inputs]
+        if los and all(v is not None for v in los + his):
+            cls._stamp_gtid_bounds(
+                files, max(min(los), trunc + 1) if trunc >= 0 else min(los), max(his))
+        return files

@@ -496,9 +496,10 @@ class StreamingWireApplier(StreamingApplier):
     ) -> StreamingQuery:
         """Tail ``source_dir`` (JSON-lines wire payloads, WIRE_SCHEMA
         envelope) and apply each micro-batch. ``row_ddl`` is the row
-        struct of the observed table (defaults to the repo-table shape).
-        ``resume_from_table`` hands off a ReplayRunner-bootstrapped table
-        (module docstring); the floor filters the DECODED stream.
+        struct of the observed table(s) (defaults to the repo-table shape).
+        ``resume_from_table`` hands off a table or catalog bootstrapped by
+        a replay runner (module docstring); the floor filters the DECODED
+        stream.
         ``quarantine_dir`` dead-letters undecodable messages there as
         parquet envelopes instead of silently dropping them (the
         reference logs-and-skips; see :func:`_quarantine_split`)."""
@@ -636,21 +637,9 @@ class StreamingWireCatalogApplier(StreamingCatalogApplier):
     merge projects leniently onto its own columns, so heterogeneous tables
     share one decode pass."""
 
-    def start(
-        self,
-        source_dir: str,
-        checkpoint_dir: str,
-        row_ddl: str | None = None,
-        available_now: bool = True,
-        max_files_per_trigger: int | None = None,
-        resume_from_table: bool = False,
-        quarantine_dir: str | None = None,
-    ) -> StreamingQuery:
-        stream = _read_source(self.spark, source_dir, max_files_per_trigger,
-                              row_ddl=row_ddl, quarantine=quarantine_dir is not None)
-        return self._start(stream, checkpoint_dir, available_now,
-                           resume_from_table=resume_from_table,
-                           quarantine_dir=quarantine_dir)
+    # the wire reader is the single-table wire shell's; only the apply
+    # hooks (inherited from StreamingCatalogApplier) differ
+    start = StreamingWireApplier.start
 
 
 class StreamingWirePublisher:
